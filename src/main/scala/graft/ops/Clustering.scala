@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import org.apache.spark.storage.StorageLevel
 
 /** HASH-EXACT k-means — Lloyd's algorithm (1957/1982) in integer
   * fixed-point over 2-d quantized features, the fraud-segmentation /
@@ -49,46 +48,40 @@ object Clustering {
 
   def kmeansExact2d(df: DataFrame, xCol: String, yCol: String,
                     k: Int, iters: Int): DataFrame =
-    kmeansExact2dImpl(df, xCol, yCol, k, iters, persist = false).df
+    kmeansExact2dCached(df, xCol, yCol, k, iters).df
 
-  /** [[kmeansExact2d]] with the distinct-value histogram persisted
-    * (every Lloyd iteration rescans it against the centroid literals)
-    * and handed back for release — the form the bench queries run.
-    * The plain form is unhinted: leak-free, re-deriving the histogram
-    * once per iteration (correct, `iters`× the scan cost).
+  /** [[kmeansExact2d]] with its release handle — the form the bench
+    * queries run. Past the driver gate's bound the distinct-value
+    * histogram stays pinned (every Lloyd iteration rescans it against
+    * the centroid literals) until `release()`; the plain form leaves
+    * that pin to the session's clearCache.
     */
   def kmeansExact2dCached(df: DataFrame, xCol: String, yCol: String,
-                          k: Int, iters: Int): Cached =
-    kmeansExact2dImpl(df, xCol, yCol, k, iters, persist = true)
-
-  private def kmeansExact2dImpl(df: DataFrame, xCol: String, yCol: String,
-                                k: Int, iters: Int,
-                                persist: Boolean): Cached = {
+                          k: Int, iters: Int): Cached = {
     require(k >= 2 && iters >= 1, "k >= 2 and iters >= 1")
-    val dec38 = DecimalType(38, 0)
-    val spark = df.sparkSession
     val hist = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
       .groupBy(col("__x"), col("__y")).agg(count(lit(1)).as("__w"))
-      .transform(d =>
-        if (persist) d.persist(StorageLevel.MEMORY_AND_DISK) else d)
     // r14 driver gate (the Graph.Local engine): when the distinct-value
     // histogram passes the row+byte-budget collect, every Lloyd round
     // is pure integer algebra over it — init div rule, exact-d2 argmin,
     // truncated decimal means, inertia decimal sum — replayed on the
     // driver (Local doc; ClusteringSpec pins both paths bit-for-bit).
-    // Past the bound the literal-argmin loop below runs unchanged on
-    // the pinned collect fallback.
-    var extra: Seq[DataFrame] = Nil
-    Layout.collectBounded(hist, 10000000L) match {
-      case Right(rows)
-          if !rows.exists(r => (0 until r.length).exists(r.isNullAt)) =>
-        return Cached(Local.kmeans(spark, rows, k, iters), Seq.empty)
-      case Right(_) => ()
-      case Left(_) => extra = if (persist) Nil else Seq(hist)
-    }
+    // Past the bound the literal-argmin loop ([[kmeansFrames]]) runs
+    // unchanged on the pinned collect fallback.
+    Layout.gateCached(hist)(rows =>
+      Some(Local.kmeans(df.sparkSession, rows, k, iters)))(
+      kmeansFrames(_, k, iters))
+  }
+
+  /** The distributed Lloyd loop over the `(__x, __y, __w)` histogram
+    * the gate pinned.
+    */
+  private def kmeansFrames(hist: DataFrame, k: Int, iters: Int): Cached = {
+    val dec38 = DecimalType(38, 0)
+    val spark = hist.sparkSession
     // grid-midpoint init: j-th centroid at the center of the j-th of k
     // equal spans — deterministic, data-dependent only through min/max.
     // The init arithmetic runs in Spark SQL over the 1-row bounds
@@ -118,7 +111,7 @@ object Clustering {
           StructField("n", LongType), StructField("cx", LongType),
           StructField("cy", LongType),
           StructField("inertia", DoubleType))))
-      return Cached(out, if (persist) Seq(hist) else Seq.empty)
+      return Cached(out, Seq.empty)
     }
     // winner per histogram cell: least() over k (d2, j) structs — the
     // struct order (distance, then index) IS the min_by tie rule
@@ -161,7 +154,7 @@ object Clustering {
           .as("inertia"))
       .join(broadcast(centDf), Seq("j"))
       .select(col("j"), col("n"), col("cx"), col("cy"), col("inertia"))
-    Cached(out, (if (persist) Seq(hist) else Seq.empty) ++ extra)
+    Cached(out, Seq.empty)
   }
 
   /** Driver-local EXACT replica of the Lloyd loop over the collected

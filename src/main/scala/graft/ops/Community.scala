@@ -486,29 +486,6 @@ object Community {
     }
   }
 
-  /** r14 query-level driver gate for the Louvain family (g14–g17):
-    * `Right(es)` = the fine edge list collected and lifted to w = 1
-    * (BIGINT ids, inside [[Layout.collectBounded]]'s row+byte bound,
-    * null-free) — the caller runs [[Local]] algebra on it;
-    * `Left(src)` = the frame to run the distributed path on, either
-    * the original edges or the already-materialized collect fallback
-    * (so the caller's own persist is a no-op on it and nothing is
-    * computed twice).
-    */
-  private[graft] def localFineEdges(edges: DataFrame)
-      : Either[DataFrame, Array[Local.E]] = {
-    if (!Seq("u", "v").forall(c => edges.schema(c).dataType ==
-        org.apache.spark.sql.types.LongType)) return Left(edges)
-    graft.ops.Layout.collectBounded(
-        edges.select(col("u"), col("v")), 10000000L) match {
-      case Right(rows)
-          if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) =>
-        Right(rows.map(r => (r.getLong(0), r.getLong(1), 1L)))
-      case Right(_) => Left(edges)
-      case Left(p) => Left(p)
-    }
-  }
-
   case class LouvainResult(membership: DataFrame, trace: DataFrame)
 
   /** FULL Louvain to convergence (r12 verdict mandate #4): the
@@ -635,38 +612,17 @@ object Community {
   def louvain(edges: DataFrame, maxLevels: Int = 3): LouvainResult = {
     require(maxLevels >= 1 && maxLevels <= 8,
       s"maxLevels in [1, 8], got $maxLevels")
-    val bound = 10000000L
-    val cut = (df: DataFrame) =>
-      graft.ops.Layout.materializeBounded(df, maxRows = bound)
-    val e0 = lift(edges)
     // r14 driver gate (the Graph.Local stance): a bounded BIGINT fine
     // edge list runs every level locally; past the bound (or non-long
     // or null-carrying node ids) the distributed branches below are
     // untouched
-    if (Seq("u", "v").forall(c => edges.schema(c).dataType ==
-        org.apache.spark.sql.types.LongType))
-      graft.ops.Layout.collectBounded(e0, bound) match {
-        case Right(rows)
-            if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) =>
-          return louvainLocal(edges.sparkSession, Local.fromRows(rows),
-            maxLevels)
-        case Right(_) =>
-          // null endpoints keep frame semantics: rebuild the frame
-          // (the collected pin was released by collectBounded)
-          ()
-        case Left(pe) =>
-          // past-bound fallback reads the already-materialized pin;
-          // its cache entry is released with the session's clearCache
-          // (the Bench/Verify per-query discipline)
-          return louvainDistributed(pe, maxLevels, bound, cut)
-      }
-    louvainDistributed(e0, maxLevels, bound, cut)
+    Layout.gate(lift(edges))(rows => Some(louvainLocal(edges.sparkSession,
+      Local.fromRows(rows), maxLevels)))(louvainDistributed(_, maxLevels))
   }
 
-  private def louvainDistributed(e0: DataFrame, maxLevels: Int,
-                                 bound: Long,
-                                 cut: DataFrame => DataFrame)
+  private def louvainDistributed(e0: DataFrame, maxLevels: Int)
       : LouvainResult = {
+    val cut = (df: DataFrame) => Layout.materializeBounded(df, Layout.GateRows)
     val trace = Vector.newBuilder[(Long, Long, Long, Long)]
     // level 1, distributed (the fine graph is never collected): one
     // degree pass feeds guard, q0 and the sweep
@@ -684,8 +640,8 @@ object Community {
     // (the normal case) the fine COMPOSITION is driver maps too and
     // the whole remainder of the loop touches no Spark job except the
     // one distributed coarsen of the fine graph
-    graft.ops.Layout.collectBounded(
-        moveFromDeg(e0, deg0, m, downOnly = false), bound) match {
+    Layout.collectBounded(
+        moveFromDeg(e0, deg0, m, downOnly = false), Layout.GateRows) match {
       case Right(rows1) =>
         deg0.unpersist(blocking = false)
         val nodesArr = rows1.map(_.getLong(0))
@@ -703,8 +659,7 @@ object Community {
         } else {
           val mb1 = spark.createDataFrame(
             nodesArr.zip(cPrev).toSeq).toDF("node", "comm")
-          graft.ops.Layout.collectBounded(coarsen(e0, mb1),
-              bound) match {
+          Layout.collectBounded(coarsen(e0, mb1), Layout.GateRows) match {
             case Right(ceRows) =>
               // driver continuation: deeper levels are Long algebra
               var es = Local.fromRows(ceRows)
@@ -733,9 +688,9 @@ object Community {
               var wedges: DataFrame = ceBig
               var converged = false
               while (level <= maxLevels && !converged) {
-                val membRows = graft.ops.Layout.collectBounded(
+                val membRows = Layout.collectBounded(
                   greedyMoveFromSingletonsW(wedges, downOnly = true),
-                  bound) match {
+                  Layout.GateRows) match {
                   case Right(r) => r
                   case Left(p) =>
                     // a coarse membership larger than the fine one is

@@ -543,66 +543,58 @@ object Dedup {
     // (same per-phase min, same changed?-convergence probe, same
     // maxIter cap), so labels match bit for bit even on graphs the
     // cap leaves unconverged. Past the bound (or non-BIGINT/null ids)
-    // the distributed loop runs unchanged on the pinned fallback.
-    val pSel = pairs.select(col("id_a"), col("id_b"))
-    var pSrc: DataFrame = pairs
-    var pPin: Option[DataFrame] = None
-    if (Seq("id_a", "id_b").forall(c => pSel.schema(c).dataType ==
-        org.apache.spark.sql.types.LongType))
-      Layout.collectBounded(pSel, 10000000L) match {
-        case Right(rows)
-            if !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)) =>
-          return componentsLocal(pairs.sparkSession, rows, maxIter)
-        case Right(_) => ()
-        case Left(p) => pSrc = p; pPin = Some(p)
+    // the distributed loop runs unchanged on the pinned fallback (the
+    // labels are checkpoint-cut, so the gate may release the pin on
+    // return).
+    Layout.gate(pairs.select(col("id_a"), col("id_b")))(rows =>
+      Some(componentsLocal(pairs.sparkSession, rows, maxIter))) { src =>
+      val edges = src.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(src.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var labels = Checkpoints.cut(
+        edges.select(col("src").as("id")).distinct()
+          .withColumn("component", col("id")))
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        val nbrMin = edges
+          .join(labels.withColumnRenamed("id", "dst")
+            .withColumnRenamed("component", "nbr_component"), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min(col("nbr_component")).as("nbr_min"))
+        // convergence rides along as a per-row flag: the localCheckpoint
+        // action below is the phase's ONLY full job, and the changed?
+        // probe is a short-circuiting scan of the already-materialized
+        // checkpoint (head(1)), not a second shuffle+count over the data
+        val stepped = Checkpoints.cut(
+          labels.join(nbrMin, Seq("id"), "left")
+            .select(col("id"),
+              least(col("component"),
+                coalesce(col("nbr_min"), col("component"))).as("component"),
+              (col("nbr_min").isNotNull && col("nbr_min") < col("component"))
+                .as("__changed")))
+        converged = stepped.filter(col("__changed")).head(1).isEmpty
+        labels = stepped.drop("__changed")
+        if (!converged) {
+          // pointer doubling on the materialized step result: component
+          // labels are node ids, so a node two hops from the minimum
+          // reaches it directly next phase. Labels only decrease, and
+          // always to a node id inside the same component, so the
+          // step-fixpoint convergence criterion above stays valid.
+          labels = Checkpoints.cut(labels.as("a")
+            .join(labels.select(col("id").as("__lid"),
+              col("component").as("__lcomp")).as("b"),
+              col("a.component") === col("__lid"), "left")
+            .select(col("a.id").as("id"),
+              least(col("a.component"),
+                coalesce(col("__lcomp"), col("a.component"))).as("component")))
+        }
+        iter += 1
       }
-    val edges = pSrc.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pSrc.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = Checkpoints.cut(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id")))
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("id", "dst")
-          .withColumnRenamed("component", "nbr_component"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("nbr_component")).as("nbr_min"))
-      // convergence rides along as a per-row flag: the localCheckpoint
-      // action below is the phase's ONLY full job, and the changed?
-      // probe is a short-circuiting scan of the already-materialized
-      // checkpoint (head(1)), not a second shuffle+count over the data
-      val stepped = Checkpoints.cut(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("component"), coalesce(col("nbr_min"), col("component")))
-              .as("component"),
-            (col("nbr_min").isNotNull && col("nbr_min") < col("component"))
-              .as("__changed")))
-      converged = stepped.filter(col("__changed")).head(1).isEmpty
-      labels = stepped.drop("__changed")
-      if (!converged) {
-        // pointer doubling on the materialized step result: component
-        // labels are node ids, so a node two hops from the minimum
-        // reaches it directly next phase. Labels only decrease, and
-        // always to a node id inside the same component, so the
-        // step-fixpoint convergence criterion above stays valid.
-        labels = Checkpoints.cut(labels.as("a")
-          .join(labels.select(col("id").as("__lid"),
-            col("component").as("__lcomp")).as("b"),
-            col("a.component") === col("__lid"), "left")
-          .select(col("a.id").as("id"),
-            least(col("a.component"),
-              coalesce(col("__lcomp"), col("a.component"))).as("component")))
-      }
-      iter += 1
+      edges.unpersist(blocking = false)
+      labels
     }
-    edges.unpersist(blocking = false)
-    pPin.foreach(_.unpersist(blocking = false))
-    labels
   }
 
   /** [[connectedComponents]]' phases over collected pairs — the exact

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.storage.StorageLevel
 
 /** Entity-graph analytics over the transaction stream: the reference's
@@ -108,70 +109,67 @@ object Graph {
     // an edge list that fits in memory. Past the bound the pre-r13
     // loop below is the 100-TB path. HitsSpec fixtures + the g13
     // oracle pin value equality.
-    Layout.collectBounded(mDf, 10000000L) match {
-      case Right(rows) =>
-        return Cached(hitsLocal(membership.sparkSession, rows, iters,
-          scale), Seq.empty)
-      case Left(_) => ()
-    }
-    val m = mDf.persist(StorageLevel.MEMORY_AND_DISK)
-    m.count() // eager: every half-round joins it
-    // Overflow guard (documented bound, now CHECKED): a half-round sum
-    // is ≤ deg·scale and the rescale multiplies by scale, so
-    // deg·scale² must stay under 2⁶³. The oracle computes in HUGEINT
-    // and would silently succeed past the bound — fail loudly and
-    // identically on both sides instead. One cheap aggregation on the
-    // already-persisted membership frame.
-    val maxDeg = m.groupBy(col("__mu")).agg(count(lit(1)).as("__d"))
-      .select(col("__d"))
-      .unionAll(m.groupBy(col("__ma")).agg(count(lit(1)).as("__d"))
-        .select(col("__d")))
-      .agg(max(col("__d")).as("__mx"))
-      .first() match {
-        case r if r.isNullAt(0) => 0L // empty graph: nothing to overflow
-        case r => r.getLong(0)
+    Layout.gateCached(mDf)(rows =>
+        Some(hitsLocal(membership.sparkSession, rows, iters, scale))) { src =>
+      val m = src.persist(StorageLevel.MEMORY_AND_DISK)
+      m.count() // eager: every half-round joins it
+      // Overflow guard (documented bound, now CHECKED): a half-round sum
+      // is ≤ deg·scale and the rescale multiplies by scale, so
+      // deg·scale² must stay under 2⁶³. The oracle computes in HUGEINT
+      // and would silently succeed past the bound — fail loudly and
+      // identically on both sides instead. One cheap aggregation on the
+      // already-persisted membership frame.
+      val maxDeg = m.groupBy(col("__mu")).agg(count(lit(1)).as("__d"))
+        .select(col("__d"))
+        .unionAll(m.groupBy(col("__ma")).agg(count(lit(1)).as("__d"))
+          .select(col("__d")))
+        .agg(max(col("__d")).as("__mx"))
+        .first() match {
+          case r if r.isNullAt(0) => 0L // empty graph: nothing to overflow
+          case r => r.getLong(0)
+        }
+      val degBound = Long.MaxValue / scale / scale
+      require(maxDeg <= degBound,
+        s"hitsBipartite: max degree $maxDeg exceeds overflow bound " +
+          s"$degBound for scale=$scale (deg*scale^2 must stay < 2^63); " +
+          "lower `scale` or pre-aggregate the membership frame")
+      val backing: List[DataFrame] = List(m)
+      def rescale(df: DataFrame, keyCol: String, sCol: String): DataFrame = {
+        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+        p.count() // eager: the max subtree broadcasts CONCURRENTLY with
+                  // the rescale scan — lazy persist would race and
+                  // rematerialize the half-round (the g09 lesson)
+        val mx = p.agg(max(col(sCol)).as("__mx"))
+        // Checkpoints.cut, NOT just persist: the crossJoin reads p twice
+        // (max subtree + rescale scan), so without truncating the
+        // LOGICAL plan each half-round doubles the analysis tree —
+        // 2^(2·iters) copies of the qualification subtree by the final
+        // action (measured: 17 s of planning at sf0.1). The cut is
+        // eager, so p's blocks free immediately after.
+        val out = Checkpoints.cut(p.crossJoin(broadcast(mx))
+          .selectExpr(keyCol,
+            s"($sCol * CAST($scale AS BIGINT)) div __mx AS score"))
+        p.unpersist(blocking = false)
+        out
       }
-    val degBound = Long.MaxValue / scale / scale
-    require(maxDeg <= degBound,
-      s"hitsBipartite: max degree $maxDeg exceeds overflow bound " +
-        s"$degBound for scale=$scale (deg*scale^2 must stay < 2^63); " +
-        "lower `scale` or pre-aggregate the membership frame")
-    val backing: List[DataFrame] = List(m)
-    def rescale(df: DataFrame, keyCol: String, sCol: String): DataFrame = {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // eager: the max subtree broadcasts CONCURRENTLY with
-                // the rescale scan — lazy persist would race and
-                // rematerialize the half-round (the g09 lesson)
-      val mx = p.agg(max(col(sCol)).as("__mx"))
-      // Checkpoints.cut, NOT just persist: the crossJoin reads p twice
-      // (max subtree + rescale scan), so without truncating the
-      // LOGICAL plan each half-round doubles the analysis tree —
-      // 2^(2·iters) copies of the qualification subtree by the final
-      // action (measured: 17 s of planning at sf0.1). The cut is
-      // eager, so p's blocks free immediately after.
-      val out = Checkpoints.cut(p.crossJoin(broadcast(mx))
-        .selectExpr(keyCol,
-          s"($sCol * CAST($scale AS BIGINT)) div __mx AS score"))
-      p.unpersist(blocking = false)
-      out
+      var hubs = m.select(col("__mu").as("node")).distinct()
+        .withColumn("score", lit(scale))
+      var auths: DataFrame = null
+      for (_ <- 1 to iters) {
+        val aRaw = m.join(hubs.withColumnRenamed("node", "__mu"), Seq("__mu"))
+          .groupBy(col("__ma").as("node")).agg(sum(col("score")).as("__s"))
+        auths = rescale(aRaw, "node", "__s")
+        val hRaw = m.join(auths.withColumnRenamed("node", "__ma"), Seq("__ma"))
+          .groupBy(col("__mu").as("node")).agg(sum(col("score")).as("__s"))
+        hubs = rescale(hRaw, "node", "__s")
+      }
+      val out = auths.select(lit("auth").as("kind"), col("node"),
+          col("score"))
+        .unionByName(hubs.select(lit("hub").as("kind"), col("node"),
+          col("score")))
+        .orderBy(col("kind"), col("node"))
+      Cached(out, backing)
     }
-    var hubs = m.select(col("__mu").as("node")).distinct()
-      .withColumn("score", lit(scale))
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      val aRaw = m.join(hubs.withColumnRenamed("node", "__mu"), Seq("__mu"))
-        .groupBy(col("__ma").as("node")).agg(sum(col("score")).as("__s"))
-      auths = rescale(aRaw, "node", "__s")
-      val hRaw = m.join(auths.withColumnRenamed("node", "__ma"), Seq("__ma"))
-        .groupBy(col("__mu").as("node")).agg(sum(col("score")).as("__s"))
-      hubs = rescale(hRaw, "node", "__s")
-    }
-    val out = auths.select(lit("auth").as("kind"), col("node"),
-        col("score"))
-      .unionByName(hubs.select(lit("hub").as("kind"), col("node"),
-        col("score")))
-      .orderBy(col("kind"), col("node"))
-    Cached(out, backing)
   }
 
   def hitsBipartite(membership: DataFrame, userCol: String,
@@ -286,33 +284,25 @@ object Graph {
                                 persist: Boolean): Cached = {
     // r14 driver gate — [[Local.assortativity]]; the moment-sum
     // pipeline below is the past-bound fallback on the pinned collect
-    val eSel0 = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel0, "u", "v"))
-      Layout.collectBounded(eSel0, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          return Cached(Local.assortativity(edges.sparkSession, rows),
-            Seq.empty)
-        case Right(_) => ()
-        case Left(p) => eSrc = p; extra = Seq(p)
-      }
-    def pin(d: DataFrame): DataFrame =
-      if (persist) d.persist(StorageLevel.MEMORY_AND_DISK) else d
-    val sym = pin(symmetrize(eSrc))
-    val deg = pin(sym.groupBy(col("u")).agg(count(lit(1)).as("__d")))
-    val pairs = sym
-      .join(deg.select(col("u"), col("__d").as("__dx")), Seq("u"))
-      .join(deg.select(col("u").as("v"), col("__d").as("__dy")), Seq("v"))
-      .select(lit(1).as("__all"), col("__dx"), col("__dy"))
-    // one canonical spelling of the moment→covariance chain
-    // (Anomaly.stats2) — the oracle mirrors it term for term
-    val out = Anomaly.stats2(pairs, "__all", "__dx", "__dy")
-      .select(col("__n").as("n_endpoints"),
-        when(col("__vx") > 0.0 && col("__vy") > 0.0,
-          round(col("__cxy") / sqrt(col("__vx") * col("__vy")), 7))
-          .as("assortativity"))
-    Cached(out, (if (persist) Seq(sym, deg) else Seq.empty) ++ extra)
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+        Some(Local.assortativity(edges.sparkSession, rows))) { src =>
+      def pin(d: DataFrame): DataFrame =
+        if (persist) d.persist(StorageLevel.MEMORY_AND_DISK) else d
+      val sym = pin(symmetrize(src))
+      val deg = pin(sym.groupBy(col("u")).agg(count(lit(1)).as("__d")))
+      val pairs = sym
+        .join(deg.select(col("u"), col("__d").as("__dx")), Seq("u"))
+        .join(deg.select(col("u").as("v"), col("__d").as("__dy")), Seq("v"))
+        .select(lit(1).as("__all"), col("__dx"), col("__dy"))
+      // one canonical spelling of the moment→covariance chain
+      // (Anomaly.stats2) — the oracle mirrors it term for term
+      val out = Anomaly.stats2(pairs, "__all", "__dx", "__dy")
+        .select(col("__n").as("n_endpoints"),
+          when(col("__vx") > 0.0 && col("__vy") > 0.0,
+            round(col("__cxy") / sqrt(col("__vx") * col("__vy")), 7))
+            .as("assortativity"))
+      Cached(out, if (persist) Seq(sym, deg) else Seq.empty)
+    }
   }
 
   /** Minimum-hop distance from a seed set, bounded at `maxHops` —
@@ -336,47 +326,37 @@ object Graph {
   def khopReach(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     // r14 driver gate — [[Local]] doc; frontier BFS over the collected
-    // adjacency
-    val eSel = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var ePin: Option[DataFrame] = None
-    if (allLong(eSel, "u", "v"))
-      Layout.collectBounded(eSel, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          collectSeeds(seeds) match {
-            case Some(ss) =>
-              return Local.khop(edges.sparkSession, rows, ss, maxHops)
-            case None => ()
-          }
-        case Right(_) => ()
-        case Left(p) => eSrc = p; ePin = Some(p)
+    // adjacency (the levels are checkpoint-cut, so the gate may release
+    // its pin on return)
+    Layout.gate(edges.select(col("u"), col("v")))(rows =>
+      collectSeeds(seeds).map(Local.khop(edges.sparkSession, rows, _,
+        maxHops))) { src =>
+      val sym = symmetrize(src).persist(StorageLevel.MEMORY_AND_DISK)
+      var visited = Checkpoints.cut(
+        seeds.select(col("node")).distinct()
+          .withColumn("hops", lit(0)))
+      var frontier = visited
+      var h = 0
+      var done = maxHops == 0
+      while (!done) {
+        h += 1
+        val next = Checkpoints.cut(
+          frontier.select(col("node").as("u"))
+            .join(sym, Seq("u"))
+            .select(col("v").as("node"))
+            .distinct()
+            .join(visited, Seq("node"), "left_anti")
+            .withColumn("hops", lit(h)))
+        if (next.head(1).isEmpty) done = true
+        else {
+          visited = visited.union(next)
+          frontier = next
+          done = h >= maxHops
+        }
       }
-    val sym = symmetrize(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
-    var visited = Checkpoints.cut(
-      seeds.select(col("node")).distinct()
-        .withColumn("hops", lit(0)))
-    var frontier = visited
-    var h = 0
-    var done = maxHops == 0
-    while (!done) {
-      h += 1
-      val next = Checkpoints.cut(
-        frontier.select(col("node").as("u"))
-          .join(sym, Seq("u"))
-          .select(col("v").as("node"))
-          .distinct()
-          .join(visited, Seq("node"), "left_anti")
-          .withColumn("hops", lit(h)))
-      if (next.head(1).isEmpty) done = true
-      else {
-        visited = visited.union(next)
-        frontier = next
-        done = h >= maxHops
-      }
+      sym.unpersist(blocking = false)
+      visited
     }
-    sym.unpersist(blocking = false)
-    ePin.foreach(_.unpersist(blocking = false))
-    visited
   }
 
   /** Fixed-iteration PageRank in integer fixed-point arithmetic.
@@ -414,64 +394,50 @@ object Graph {
     // tokens), so string keys go through a driver dictionary — the
     // algebra itself is key-blind.
     val eSel = edges.select(col("u"), col("v"))
-    val uvStr = Seq("u", "v").forall(c => eSel.schema(c).dataType ==
-      org.apache.spark.sql.types.StringType)
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel, "u", "v") || uvStr)
-      Layout.collectBounded(eSel, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          return Cached(
-            if (uvStr) Local.pageRankStr(edges.sparkSession, rows,
-              iters, scale, dampPct)
-            else Local.pageRank(edges.sparkSession, rows, None,
-              iters, scale, dampPct), Seq.empty)
-        case Right(_) => () // null endpoints: keep the frame semantics
-        case Left(p) => eSrc = p; extra = Seq(p)
+    val uvStr = eSel.schema.forall(_.dataType == StringType)
+    Layout.gateCached(eSel, ts => Layout.allBigint(ts) || uvStr)(rows =>
+      Some(
+        if (uvStr) Local.pageRankStr(edges.sparkSession, rows, iters,
+          scale, dampPct)
+        else Local.pageRank(edges.sparkSession, rows, None, iters, scale,
+          dampPct))) { src =>
+      val sym = symmetrize(src).persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = sym.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val base = scale * (100 - dampPct) / 100
+      var ranks = deg.select(col("node")).withColumn("rank", lit(scale))
+      for (i <- 1 to iters) {
+        val contribs = ranks.join(deg, Seq("node"))
+          .selectExpr("node AS u", "rank div deg AS c")
+        val incoming = sym.join(contribs, Seq("u"))
+          .groupBy(col("v").as("node"))
+          .agg(sum(col("c")).as("s"))
+        ranks = deg.select(col("node"))
+          .join(incoming, Seq("node"), "left")
+          .selectExpr("node",
+            s"CAST($base AS BIGINT) + " +
+              s"($dampPct * coalesce(s, CAST(0 AS BIGINT))) div 100 AS rank")
+        if (i % checkpointEvery == 0 && i < iters)
+          ranks = Checkpoints.cut(ranks)
       }
-    val sym = symmetrize(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = scale * (100 - dampPct) / 100
-    var ranks = deg.select(col("node")).withColumn("rank", lit(scale))
-    for (i <- 1 to iters) {
-      val contribs = ranks.join(deg, Seq("node"))
-        .selectExpr("node AS u", "rank div deg AS c")
-      val incoming = sym.join(contribs, Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(sum(col("c")).as("s"))
-      ranks = deg.select(col("node"))
-        .join(incoming, Seq("node"), "left")
-        .selectExpr("node",
-          s"CAST($base AS BIGINT) + " +
-            s"($dampPct * coalesce(s, CAST(0 AS BIGINT))) div 100 AS rank")
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = Checkpoints.cut(ranks)
+      Cached(ranks, Seq(sym, deg))
     }
-    Cached(ranks, Seq(sym, deg) ++ extra)
   }
 
   def pageRank(edges: DataFrame, iters: Int = 3, scale: Long = 1000000L,
                dampPct: Int = 85): DataFrame =
     pageRankCached(edges, iters, scale, dampPct).df
 
-  /** Bounded collect of a distinct seed/node column for the driver
-    * gate: Some(values) iff the column is BIGINT, fits the bound, and
-    * carries no nulls (a null node row has frame semantics of its own
-    * — keep the distributed path for it). A Left fallback is
-    * unpersisted on the spot; seed frames are node-bounded so that
-    * path is theoretical.
+  /** The seeds' own driver gate: Some(values) iff the distinct `node`
+    * column is BIGINT, null-free (a null node row has frame semantics
+    * of its own) and inside the bound. A refused collect's pin is
+    * released on the spot; seed frames are node-bounded, so that path
+    * is theoretical.
     */
-  private def collectSeeds(seeds: DataFrame): Option[Array[Long]] = {
-    val sSel = seeds.select(col("node")).distinct()
-    if (!allLong(sSel, "node")) return None
-    Layout.collectBounded(sSel, LocalBound) match {
-      case Right(sr) if noNulls(sr) => Some(sr.map(_.getLong(0)))
-      case Right(_) => None
-      case Left(sp) => sp.unpersist(blocking = false); None
-    }
-  }
+  private def collectSeeds(seeds: DataFrame): Option[Array[Long]] =
+    Layout.gateRows(seeds.select(col("node")).distinct())
+      .map(_.map(_.getLong(0)))
 
   /** PERSONALIZED PageRank: restart mass returns only to the `seeds`
     * set (known-fraud accounts), so rank measures proximity to the
@@ -503,49 +469,38 @@ object Graph {
     require(scale >= 100L, s"scale must be >= 100, got $scale")
     // r14 driver gate — [[Local]] doc; identical update with the seed
     // indicator deciding the restart term
-    val eSel = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel, "u", "v"))
-      Layout.collectBounded(eSel, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          collectSeeds(seeds) match {
-            case Some(ss) =>
-              return Cached(Local.pageRank(edges.sparkSession, rows,
-                Some(ss), iters, scale, dampPct), Seq.empty)
-            case None => ()
-          }
-        case Right(_) => ()
-        case Left(p) => eSrc = p; extra = Seq(p)
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+      collectSeeds(seeds).map(ss => Local.pageRank(edges.sparkSession,
+        rows, Some(ss), iters, scale, dampPct))) { src =>
+      val sym = symmetrize(src).persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = sym.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg"))
+      val nodes = deg
+        .join(seeds.select(col("node")).distinct()
+          .withColumn("is_seed", lit(1L)), Seq("node"), "left")
+        .select(col("node"), col("deg"),
+          coalesce(col("is_seed"), lit(0L)).as("is_seed"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val base = scale * (100 - dampPct) / 100
+      var ranks = nodes.select(col("node"),
+        (col("is_seed") * scale).as("rank"))
+      for (i <- 1 to iters) {
+        val contribs = ranks.join(nodes.select(col("node"), col("deg")),
+            Seq("node"))
+          .selectExpr("node AS u", "rank div deg AS c")
+        val incoming = sym.join(contribs, Seq("u"))
+          .groupBy(col("v").as("node"))
+          .agg(sum(col("c")).as("s"))
+        ranks = nodes.select(col("node"), col("is_seed"))
+          .join(incoming, Seq("node"), "left")
+          .selectExpr("node",
+            s"is_seed * CAST($base AS BIGINT) + " +
+              s"($dampPct * coalesce(s, CAST(0 AS BIGINT))) div 100 AS rank")
+        if (i % checkpointEvery == 0 && i < iters)
+          ranks = Checkpoints.cut(ranks)
       }
-    val sym = symmetrize(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val nodes = deg
-      .join(seeds.select(col("node")).distinct()
-        .withColumn("is_seed", lit(1L)), Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = scale * (100 - dampPct) / 100
-    var ranks = nodes.select(col("node"),
-      (col("is_seed") * scale).as("rank"))
-    for (i <- 1 to iters) {
-      val contribs = ranks.join(nodes.select(col("node"), col("deg")),
-          Seq("node"))
-        .selectExpr("node AS u", "rank div deg AS c")
-      val incoming = sym.join(contribs, Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(sum(col("c")).as("s"))
-      ranks = nodes.select(col("node"), col("is_seed"))
-        .join(incoming, Seq("node"), "left")
-        .selectExpr("node",
-          s"is_seed * CAST($base AS BIGINT) + " +
-            s"($dampPct * coalesce(s, CAST(0 AS BIGINT))) div 100 AS rank")
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = Checkpoints.cut(ranks)
+      Cached(ranks, Seq(sym, nodes))
     }
-    Cached(ranks, Seq(sym, nodes) ++ extra)
   }
 
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
@@ -578,40 +533,36 @@ object Graph {
     require(maxMiddleDegree >= 1, "maxMiddleDegree must be >= 1")
     // r14 driver gate — [[Local.linkPrediction]]; the join pipeline
     // below is the past-bound fallback, reading the pinned collect
-    val eSel0 = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var ePin: Option[DataFrame] = None
-    if (allLong(eSel0, "u", "v"))
-      Layout.collectBounded(eSel0, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          return Local.linkPrediction(edges.sparkSession, rows, k,
-            maxMiddleDegree)
-        case Right(_) => ()
-        case Left(p) => eSrc = p; ePin = Some(p)
-      }
-    val symAll = symmetrize(eSrc)
-    val degAll = symAll.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val okMiddles = degAll.filter(col("deg") <= maxMiddleDegree)
-      .select(col("node").as("m0"))
-    val sym = symAll.join(okMiddles, col("u") === col("m0"), "left_semi")
-    val s1 = sym.select(col("u").as("m"), col("v").as("a"))
-    val s2 = sym.select(col("u").as("m2"), col("v").as("b"))
-    val cand = s1.join(s2, col("m") === col("m2") && col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cn"))
-    val nonAdj = cand.join(
-      eSrc.select(col("u").as("a"), col("v").as("b")),
-      Seq("a", "b"), "left_anti")
-    // Jaccard denominators use TRUE degrees (hub neighbors still count
-    // toward |N(a) ∪ N(b)|; only the WEDGE role of hubs is capped)
-    nonAdj
-      .join(degAll.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(degAll.select(col("node").as("b"), col("deg").as("db")), "b")
-      .select(col("a"), col("b"), col("cn"),
-        (col("cn").cast("double")
-          / (col("da") + col("db") - col("cn")).cast("double"))
-          .as("jaccard"))
-      .orderBy(col("cn").desc, col("a"), col("b")).limit(k)
+    // lazily — so the pin rides a Cached handle that is never released
+    // here and lives until the session's clearCache (the [[kCore]]
+    // convention)
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+        Some(Local.linkPrediction(edges.sparkSession, rows, k,
+          maxMiddleDegree))) { src =>
+      val symAll = symmetrize(src)
+      val degAll = symAll.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg"))
+      val okMiddles = degAll.filter(col("deg") <= maxMiddleDegree)
+        .select(col("node").as("m0"))
+      val sym = symAll.join(okMiddles, col("u") === col("m0"), "left_semi")
+      val s1 = sym.select(col("u").as("m"), col("v").as("a"))
+      val s2 = sym.select(col("u").as("m2"), col("v").as("b"))
+      val cand = s1.join(s2, col("m") === col("m2") && col("a") < col("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cn"))
+      val nonAdj = cand.join(
+        src.select(col("u").as("a"), col("v").as("b")),
+        Seq("a", "b"), "left_anti")
+      // Jaccard denominators use TRUE degrees (hub neighbors still count
+      // toward |N(a) ∪ N(b)|; only the WEDGE role of hubs is capped)
+      Cached(nonAdj
+        .join(degAll.select(col("node").as("a"), col("deg").as("da")), "a")
+        .join(degAll.select(col("node").as("b"), col("deg").as("db")), "b")
+        .select(col("a"), col("b"), col("cn"),
+          (col("cn").cast("double")
+            / (col("da") + col("db") - col("cn")).cast("double"))
+            .as("jaccard"))
+        .orderBy(col("cn").desc, col("a"), col("b")).limit(k), Seq.empty)
+    }.df
   }
 
   /** Per-node triangle membership counts — the local-density signal
@@ -635,42 +586,34 @@ object Graph {
   def triangleCountsCached(edges: DataFrame): Cached = {
     // r14 driver gate — [[Local.triangles]]; the frame pipeline below
     // is the past-bound fallback, reading the pinned collect
-    val eSel0 = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel0, "u", "v"))
-      Layout.collectBounded(eSel0, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          return Cached(Local.triangles(edges.sparkSession, rows),
-            Seq.empty)
-        case Right(_) => ()
-        case Left(p) => eSrc = p; extra = Seq(p)
-      }
-    val deg = symmetrize(eSrc).groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val withDeg = eSrc.select(col("u"), col("v"))
-      .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
-    val oriented = withDeg.select(
-        when(col("du") < col("dv") ||
-            (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("a"), col("v").as("b")))
-          .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val wedges = oriented.as("x")
-      .join(oriented.select(col("a").as("b"), col("b").as("c")).as("y"),
-        Seq("b"))
-    val tris = wedges.join(oriented.select(col("a"), col("b").as("c")),
-        Seq("a", "c"), "left_semi")
-      .select(col("a"), col("b"), col("c"))
-    val counts = tris
-      .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("triangles"))
-    // the oriented list backs both wedge sides of the self-join;
-    // release after the consuming action (recompute-safe if early)
-    Cached(counts, Seq(oriented) ++ extra)
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+        Some(Local.triangles(edges.sparkSession, rows))) { src =>
+      val deg = symmetrize(src).groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg"))
+      val withDeg = src
+        .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
+        .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
+      val oriented = withDeg.select(
+          when(col("du") < col("dv") ||
+              (col("du") === col("dv") && col("u") < col("v")),
+            struct(col("u").as("a"), col("v").as("b")))
+            .otherwise(struct(col("v").as("a"), col("u").as("b"))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val wedges = oriented.as("x")
+        .join(oriented.select(col("a").as("b"), col("b").as("c")).as("y"),
+          Seq("b"))
+      val tris = wedges.join(oriented.select(col("a"), col("b").as("c")),
+          Seq("a", "c"), "left_semi")
+        .select(col("a"), col("b"), col("c"))
+      val counts = tris
+        .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+        .groupBy(col("node"))
+        .agg(count(lit(1)).as("triangles"))
+      // the oriented list backs both wedge sides of the self-join;
+      // release after the consuming action (recompute-safe if early)
+      Cached(counts, Seq(oriented))
+    }
   }
 
   /** Local clustering coefficient per node: 2·triangles/(d(d−1)) over
@@ -689,31 +632,23 @@ object Graph {
     // r14 driver gate — [[Local.clusteringCoeff]]; past the bound the
     // original query-layer composition runs unchanged on the pinned
     // collect
-    val eSel0 = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel0, "u", "v"))
-      Layout.collectBounded(eSel0, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          return Cached(Local.clusteringCoeff(edges.sparkSession, rows),
-            Seq.empty)
-        case Right(_) => ()
-        case Left(p) => eSrc = p; extra = Seq(p)
-      }
-    val e = eSrc.persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = symmetrize(e)
-      .groupBy(col("u").as("node")).agg(count(lit(1)).as("degree"))
-    val tc = triangleCountsCached(e)
-    val out = tc.df
-      .join(deg, Seq("node"), "right")
-      .select(col("node"), col("degree"),
-        coalesce(col("triangles"), lit(0L)).as("triangles"),
-        when(col("degree") >= 2,
-          round(lit(2.0) * coalesce(col("triangles"), lit(0L))
-            .cast("double") /
-            (col("degree").cast("double") *
-              (col("degree") - 1).cast("double")), 7)).as("coeff"))
-    Cached(out, Seq(e) ++ tc.backing ++ extra)
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+        Some(Local.clusteringCoeff(edges.sparkSession, rows))) { src =>
+      val e = src.persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = symmetrize(e)
+        .groupBy(col("u").as("node")).agg(count(lit(1)).as("degree"))
+      val tc = triangleCountsCached(e)
+      val out = tc.df
+        .join(deg, Seq("node"), "right")
+        .select(col("node"), col("degree"),
+          coalesce(col("triangles"), lit(0L)).as("triangles"),
+          when(col("degree") >= 2,
+            round(lit(2.0) * coalesce(col("triangles"), lit(0L))
+              .cast("double") /
+              (col("degree").cast("double") *
+                (col("degree") - 1).cast("double")), 7)).as("coeff"))
+      Cached(out, Seq(e) ++ tc.backing)
+    }
   }
 
   /** k-CORE decomposition, fixed-iteration form: `iters` synchronous
@@ -741,53 +676,45 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     // r14 driver gate — [[Local]] doc; synchronous peels over the
     // collected edge array
-    val eSel = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel, "u", "v"))
-      Layout.collectBounded(eSel, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          return Cached(Local.kCore(edges.sparkSession, rows, k, iters),
-            Seq.empty)
-        case Right(_) => ()
-        case Left(p) => eSrc = p; extra = Seq(p)
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+        Some(Local.kCore(edges.sparkSession, rows, k, iters))) { src =>
+      val sym0 = symmetrize(src).persist(StorageLevel.MEMORY_AND_DISK)
+      var sym = sym0
+      // every level fans out (keep feeds TWO semi-joins; sym feeds the
+      // degree agg AND the filtered edge set), so an unpersisted loop
+      // recomputes level i−1 three times per level — ~3^iters total
+      // (measured: g09 11.3 s at sf0.1). Lazy persists are NOT enough:
+      // the two semi-joins plan as broadcast subtrees whose exchanges
+      // execute as concurrent jobs that RACE to materialize a lazily
+      // cached keep (the e01 lesson) — measured 5.4 s. Each level's keep
+      // therefore goes through materializeBounded (eager count → the
+      // node list lands in a LocalRelation both joins read for free, and
+      // the count itself populates the previous sym's cache before any
+      // concurrent consumer sees it); the surviving edge set persists
+      // for the next level.
+      val backing = scala.collection.mutable.ArrayBuffer[DataFrame](sym0)
+      for (i <- 1 to iters) {
+        val keep = Layout.materializeBounded(
+          sym.groupBy(col("u").as("node"))
+            .agg(count(lit(1)).as("deg"))
+            .filter(col("deg") >= k)
+            .select(col("node")))
+        // materializeBounded's >maxRows fallback returns the PERSISTED
+        // frame (not a LocalRelation); track it so release() can unpin
+        // it — otherwise one node-cardinality cache entry leaks per peel
+        // exactly at the large-graph scale this op targets
+        if (keep.storageLevel != StorageLevel.NONE) backing += keep
+        sym = sym
+          .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
+          .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        backing += sym
+        if (i % checkpointEvery == 0 && i < iters) sym = Checkpoints.cut(sym)
       }
-    val sym0 = symmetrize(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
-    var sym = sym0
-    // every level fans out (keep feeds TWO semi-joins; sym feeds the
-    // degree agg AND the filtered edge set), so an unpersisted loop
-    // recomputes level i−1 three times per level — ~3^iters total
-    // (measured: g09 11.3 s at sf0.1). Lazy persists are NOT enough:
-    // the two semi-joins plan as broadcast subtrees whose exchanges
-    // execute as concurrent jobs that RACE to materialize a lazily
-    // cached keep (the e01 lesson) — measured 5.4 s. Each level's keep
-    // therefore goes through materializeBounded (eager count → the
-    // node list lands in a LocalRelation both joins read for free, and
-    // the count itself populates the previous sym's cache before any
-    // concurrent consumer sees it); the surviving edge set persists
-    // for the next level.
-    val backing = scala.collection.mutable.ArrayBuffer[DataFrame](sym0)
-    for (i <- 1 to iters) {
-      val keep = Layout.materializeBounded(
-        sym.groupBy(col("u").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k)
-          .select(col("node")))
-      // materializeBounded's >maxRows fallback returns the PERSISTED
-      // frame (not a LocalRelation); track it so release() can unpin
-      // it — otherwise one node-cardinality cache entry leaks per peel
-      // exactly at the large-graph scale this op targets
-      if (keep.storageLevel != StorageLevel.NONE) backing += keep
-      sym = sym
-        .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
-        .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      backing += sym
-      if (i % checkpointEvery == 0 && i < iters) sym = Checkpoints.cut(sym)
+      val out = sym.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg"))
+      Cached(out, backing.toSeq)
     }
-    val out = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    Cached(out, backing.toSeq ++ extra)
   }
 
   /** One-shot-session convenience over [[kCoreCached]] (the
@@ -828,69 +755,56 @@ object Graph {
       s"numClasses in [2,16], got $numClasses")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     // r14 driver gate — [[Local]] doc; the k class masses ride as
-    // per-node Long arrays
-    val eSel = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel, "u", "v"))
-      Layout.collectBounded(eSel, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          val sSel = seeds.select(col("node"), col("cls"))
-          if (allLong(sSel, "node") && sSel.schema("cls").dataType ==
-              org.apache.spark.sql.types.IntegerType)
-            Layout.collectBounded(sSel, LocalBound) match {
-              case Right(sr) if noNulls(sr) =>
-                return Cached(Local.labelSpread(edges.sparkSession,
-                  rows, sr, numClasses, iters, scale, dampPct),
-                  Seq.empty)
-              case Right(_) => ()
-              case Left(sp) => sp.unpersist(blocking = false)
-            }
-        case Right(_) => ()
-        case Left(p) => eSrc = p; extra = Seq(p)
+    // per-node Long arrays. The seeds pass their own gate inside it
+    // (BIGINT node, INT cls).
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+      Layout.gateRows(seeds.select(col("node"), col("cls")),
+          _ == Seq(LongType, IntegerType)).map(sr =>
+        Local.labelSpread(edges.sparkSession, rows, sr, numClasses, iters,
+          scale, dampPct))) { src =>
+      val sym = symmetrize(src).persist(StorageLevel.MEMORY_AND_DISK)
+      val deg = sym.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg"))
+      val nodes = deg
+        .join(seeds.groupBy(col("node"))
+          .agg(min(col("cls")).as("cls")), Seq("node"), "left")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val base = scale * (100 - dampPct) / 100
+      val ks = 0 until numClasses
+      var ranks = nodes.select(
+        (col("node") +: ks.map(c =>
+          when(col("cls") === c, scale).otherwise(0L).as(s"m$c"))): _*)
+      for (i <- 1 to iters) {
+        val contribs = ranks
+          .join(nodes.select(col("node"), col("deg")), Seq("node"))
+          .selectExpr(("node AS u" +:
+            ks.map(c => s"m$c div deg AS c$c")): _*)
+        val incoming = sym.join(contribs, Seq("u"))
+          .groupBy(col("v").as("node"))
+          .agg(sum(col("c0")).as("s0"),
+            ks.tail.map(c => sum(col(s"c$c")).as(s"s$c")): _*)
+        ranks = nodes.select(col("node"), col("cls"))
+          .join(incoming, Seq("node"), "left")
+          .selectExpr(("node" +: ks.map(c =>
+            s"CASE WHEN cls = $c THEN CAST($base AS BIGINT) " +
+              s"ELSE CAST(0 AS BIGINT) END + " +
+              s"($dampPct * coalesce(s$c, CAST(0 AS BIGINT))) div 100 " +
+              s"AS m$c")): _*)
+        if (i % checkpointEvery == 0 && i < iters)
+          ranks = Checkpoints.cut(ranks)
       }
-    val sym = symmetrize(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val nodes = deg
-      .join(seeds.groupBy(col("node"))
-        .agg(min(col("cls")).as("cls")), Seq("node"), "left")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = scale * (100 - dampPct) / 100
-    val ks = 0 until numClasses
-    var ranks = nodes.select(
-      (col("node") +: ks.map(c =>
-        when(col("cls") === c, scale).otherwise(0L).as(s"m$c"))): _*)
-    for (i <- 1 to iters) {
-      val contribs = ranks
-        .join(nodes.select(col("node"), col("deg")), Seq("node"))
-        .selectExpr(("node AS u" +:
-          ks.map(c => s"m$c div deg AS c$c")): _*)
-      val incoming = sym.join(contribs, Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(sum(col("c0")).as("s0"),
-          ks.tail.map(c => sum(col(s"c$c")).as(s"s$c")): _*)
-      ranks = nodes.select(col("node"), col("cls"))
-        .join(incoming, Seq("node"), "left")
-        .selectExpr(("node" +: ks.map(c =>
-          s"CASE WHEN cls = $c THEN CAST($base AS BIGINT) " +
-            s"ELSE CAST(0 AS BIGINT) END + " +
-            s"($dampPct * coalesce(s$c, CAST(0 AS BIGINT))) div 100 " +
-            s"AS m$c")): _*)
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = Checkpoints.cut(ranks)
+      // argmax with smallest-index ties: fold ascending, replace only on
+      // a STRICTLY greater mass
+      val (lblCol, _) = ks.tail.foldLeft((lit(0), col("m0"))) {
+        case ((bi, bm), c) =>
+          (when(col(s"m$c") > bm, lit(c)).otherwise(bi),
+            greatest(bm, col(s"m$c")))
+      }
+      val allZero = ks.map(c => col(s"m$c") === 0L).reduce(_ && _)
+      val out = ranks.withColumn("label",
+        when(allZero, lit(null)).otherwise(lblCol).cast("int"))
+      Cached(out, Seq(sym, nodes))
     }
-    // argmax with smallest-index ties: fold ascending, replace only on
-    // a STRICTLY greater mass
-    val (lblCol, _) = ks.tail.foldLeft((lit(0), col("m0"))) {
-      case ((bi, bm), c) =>
-        (when(col(s"m$c") > bm, lit(c)).otherwise(bi),
-          greatest(bm, col(s"m$c")))
-    }
-    val allZero = ks.map(c => col(s"m$c") === 0L).reduce(_ && _)
-    val out = ranks.withColumn("label",
-      when(allZero, lit(null)).otherwise(lblCol).cast("int"))
-    Cached(out, Seq(sym, nodes) ++ extra)
   }
 
   def labelSpread(edges: DataFrame, seeds: DataFrame, numClasses: Int,
@@ -929,49 +843,41 @@ object Graph {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // r14 driver gate — [[Local]] doc; min-label propagation + pointer
     // jump over the collected edge array
-    val eSel = edges.select(col("u"), col("v"))
-    var eSrc: DataFrame = edges
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(eSel, "u", "v"))
-      Layout.collectBounded(eSel, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          return Cached(Local.components(edges.sparkSession, rows,
-            rounds), Seq.empty)
-        case Right(_) => ()
-        case Left(p) => eSrc = p; extra = Seq(p)
+    Layout.gateCached(edges.select(col("u"), col("v")))(rows =>
+        Some(Local.components(edges.sparkSession, rows, rounds))) { src =>
+      val sym = symmetrize(src).persist(StorageLevel.MEMORY_AND_DISK)
+      val nodes = sym.select(col("u").as("node")).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // the per-round label frames each feed TWO consumers (prop: the
+      // edge join and the left join; the jump: both sides of the label
+      // self-join), so an unmaterialized loop re-derives round i−1
+      // several times per round — the kCore lesson (measured here:
+      // 12.9 s → eager per-round materialization). materializeBounded's
+      // >maxRows fallback returns a persisted frame; track it in
+      // `backing` so release() unpins it (the r8 advice rule).
+      val backing = scala.collection.mutable.ArrayBuffer[DataFrame](sym, nodes)
+      var lbl = nodes.withColumn("lbl", col("node"))
+      for (i <- 1 to rounds) {
+        val nbrMin = sym
+          .join(lbl.select(col("node").as("u"), col("lbl")), Seq("u"))
+          .groupBy(col("v").as("node"))
+          .agg(min(col("lbl")).as("nl"))
+        val prop = Layout.materializeBounded(
+          lbl.join(nbrMin, Seq("node"), "left")
+            .select(col("node"),
+              least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl")))
+        if (prop.storageLevel != StorageLevel.NONE) backing += prop
+        lbl = Layout.materializeBounded(
+          prop.as("a")
+            .join(prop.select(col("node").as("lbl"), col("lbl").as("l2"))
+              .as("b"), Seq("lbl"))
+            .select(col("node"), col("l2").as("lbl")))
+        if (lbl.storageLevel != StorageLevel.NONE) backing += lbl
+        if (i % checkpointEvery == 0 && i < rounds) lbl = Checkpoints.cut(lbl)
       }
-    val sym = symmetrize(eSrc).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("u").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the per-round label frames each feed TWO consumers (prop: the
-    // edge join and the left join; the jump: both sides of the label
-    // self-join), so an unmaterialized loop re-derives round i−1
-    // several times per round — the kCore lesson (measured here:
-    // 12.9 s → eager per-round materialization). materializeBounded's
-    // >maxRows fallback returns a persisted frame; track it in
-    // `backing` so release() unpins it (the r8 advice rule).
-    val backing = scala.collection.mutable.ArrayBuffer[DataFrame](sym, nodes)
-    var lbl = nodes.withColumn("lbl", col("node"))
-    for (i <- 1 to rounds) {
-      val nbrMin = sym
-        .join(lbl.select(col("node").as("u"), col("lbl")), Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(min(col("lbl")).as("nl"))
-      val prop = Layout.materializeBounded(
-        lbl.join(nbrMin, Seq("node"), "left")
-          .select(col("node"),
-            least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl")))
-      if (prop.storageLevel != StorageLevel.NONE) backing += prop
-      lbl = Layout.materializeBounded(
-        prop.as("a")
-          .join(prop.select(col("node").as("lbl"), col("lbl").as("l2"))
-            .as("b"), Seq("lbl"))
-          .select(col("node"), col("l2").as("lbl")))
-      if (lbl.storageLevel != StorageLevel.NONE) backing += lbl
-      if (i % checkpointEvery == 0 && i < rounds) lbl = Checkpoints.cut(lbl)
+      Cached(lbl.select(col("node"), col("lbl").as("component")),
+        backing.toSeq)
     }
-    Cached(lbl.select(col("node"), col("lbl").as("component")),
-      backing.toSeq ++ extra)
   }
 
   def connectedComponents(edges: DataFrame, rounds: Int): DataFrame =
@@ -1010,51 +916,40 @@ object Graph {
     // r14 driver gate — [[Local]] doc; min-plus relaxations over the
     // collected weighted edge array (weights evaluated by the collect
     // job, so weightExpr still runs in Spark)
-    var wEdges: DataFrame = wEdges0
-    var extra: Seq[DataFrame] = Nil
-    if (allLong(wEdges0, "u", "v"))
-      Layout.collectBounded(wEdges0, LocalBound) match {
-        case Right(rows) if noNulls(rows) =>
-          collectSeeds(seeds) match {
-            case Some(ss) =>
-              return Cached(Local.shortestPaths(edges.sparkSession,
-                rows, ss, rounds), Seq.empty)
-            case None => ()
-          }
-        case Right(_) => ()
-        case Left(p) => wEdges = p; extra = Seq(p)
+    Layout.gateCached(wEdges0)(rows => collectSeeds(seeds).map(
+        Local.shortestPaths(edges.sparkSession, rows, _, rounds))) { wEdges =>
+      val sym = wEdges.select(col("u"), col("v"), col("w"))
+        .union(wEdges.select(col("v").as("u"), col("u").as("v"), col("w")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val nodes = sym.select(col("u").as("node")).distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // each round's dist frame feeds BOTH the relaxation join and the
+      // re-attach left join — eager per-round materialization, the
+      // connectedComponents/kCore discipline
+      val backing = scala.collection.mutable.ArrayBuffer[DataFrame](sym, nodes)
+      var dist = nodes
+        .join(seeds.select(col("node")).distinct().withColumn("__s", lit(1)),
+          Seq("node"), "left")
+        .select(col("node"),
+          when(col("__s") === 1, lit(0L)).otherwise(lit(null)).cast("bigint")
+            .as("dist"))
+      for (i <- 1 to rounds) {
+        val relaxed = sym
+          .join(dist.filter(col("dist").isNotNull)
+            .select(col("node").as("u"), col("dist")), Seq("u"))
+          .groupBy(col("v").as("node"))
+          .agg(min(col("dist") + col("w")).as("cand"))
+        dist = Layout.materializeBounded(
+          dist.join(relaxed, Seq("node"), "left")
+            .select(col("node"),
+              when(col("dist").isNull, col("cand"))
+                .when(col("cand").isNull, col("dist"))
+                .otherwise(least(col("dist"), col("cand"))).as("dist")))
+        if (dist.storageLevel != StorageLevel.NONE) backing += dist
+        if (i % checkpointEvery == 0 && i < rounds) dist = Checkpoints.cut(dist)
       }
-    val sym = wEdges.select(col("u"), col("v"), col("w"))
-      .union(wEdges.select(col("v").as("u"), col("u").as("v"), col("w")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = sym.select(col("u").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // each round's dist frame feeds BOTH the relaxation join and the
-    // re-attach left join — eager per-round materialization, the
-    // connectedComponents/kCore discipline
-    val backing = scala.collection.mutable.ArrayBuffer[DataFrame](sym, nodes)
-    var dist = nodes
-      .join(seeds.select(col("node")).distinct().withColumn("__s", lit(1)),
-        Seq("node"), "left")
-      .select(col("node"),
-        when(col("__s") === 1, lit(0L)).otherwise(lit(null)).cast("bigint")
-          .as("dist"))
-    for (i <- 1 to rounds) {
-      val relaxed = sym
-        .join(dist.filter(col("dist").isNotNull)
-          .select(col("node").as("u"), col("dist")), Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(min(col("dist") + col("w")).as("cand"))
-      dist = Layout.materializeBounded(
-        dist.join(relaxed, Seq("node"), "left")
-          .select(col("node"),
-            when(col("dist").isNull, col("cand"))
-              .when(col("cand").isNull, col("dist"))
-              .otherwise(least(col("dist"), col("cand"))).as("dist")))
-      if (dist.storageLevel != StorageLevel.NONE) backing += dist
-      if (i % checkpointEvery == 0 && i < rounds) dist = Checkpoints.cut(dist)
+      Cached(dist.filter(col("dist").isNotNull), backing.toSeq)
     }
-    Cached(dist.filter(col("dist").isNotNull), backing.toSeq ++ extra)
   }
 
   def shortestPaths(edges: DataFrame, seeds: DataFrame,
@@ -1062,34 +957,13 @@ object Graph {
                     rounds: Int): DataFrame =
     shortestPathsCached(edges, seeds, weightExpr, rounds).df
 
-  /** Row bound for the iterative ops' driver gate — the g13/HITS bound;
-    * [[Layout.collectBounded]] additionally caps by its byte budget.
-    */
-  private val LocalBound = 10000000L
-
-  /** The driver gate only engages when every collected column is a
-    * BIGINT — the local replicas read `getLong` and a differently-typed
-    * caller (the ops are generic) must keep the distributed path.
-    */
-  private def allLong(df: DataFrame, names: String*): Boolean =
-    names.forall(n => df.schema(n).dataType ==
-      org.apache.spark.sql.types.LongType)
-
-  /** Null endpoints/weights have join/aggregate frame semantics of
-    * their own (a null never equi-joins; groupBy keeps a null key
-    * group) — the local replicas handle only the non-null graph, so a
-    * null anywhere keeps the distributed path.
-    */
-  private def noNulls(rows: Array[org.apache.spark.sql.Row]): Boolean =
-    !rows.exists(r => (0 until r.length).exists(r.isNullAt))
-
   /** Driver-local EXACT replicas of the fixed-round iterative ops over
     * a COLLECTED edge list — the r13 HITS/Louvain engine (see
     * [[hitsBipartiteCached]], [[Community.Local]]) extended in r14 to
     * the rest of the g family: every op here is pure Long/Int algebra
     * (integer min/plus/floor-div — no rounding surface), so once the
-    * canonical edge list passes [[Layout.collectBounded]]'s
-    * count+byte-budget guard, replaying the rounds through Spark jobs
+    * canonical edge list passes the driver gate ([[Layout.gate]]: the
+    * count+byte-budget guard), replaying the rounds through Spark jobs
     * is pure scheduling overhead (measured 3–6 s per query at sf0.1 on
     * a ≤10k-edge graph). Arithmetic that Spark would run under ANSI
     * overflow checks (sums, products) uses add/multiplyExact so local

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.storage.StorageLevel
 
 /** Physical-layout operators for the 100 TB path: skew-tolerant
   * aggregation, co-located (bucketed) joins, range layout.
@@ -83,7 +85,7 @@ object Layout {
                        idCol: String, maxBucket: Int)
       : (DataFrame, DataFrame) = {
     val hot = hotFrame(banded, keyCols, maxBucket)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val capped =
       if (hot.isEmpty) banded.withColumn("__salt", lit(0L))
       else saltJoin(banded, hot, keyCols, idCol, maxBucket)
@@ -114,16 +116,6 @@ object Layout {
     }
   }
 
-  /** [[materializeBounded]] with the bounded rows handed BACK to the
-    * caller (r13): operators whose continuation is itself bounded by
-    * the same cardinality (the Louvain coarse levels) can then run it
-    * as driver algebra instead of re-planning Spark jobs over a
-    * LocalRelation. `Right(rows)` ⇔ the frame fit `maxRows` AND the
-    * byte budget below (same count-then-collect guard as
-    * materializeBounded — the driver never holds an unchecked row
-    * set); `Left(persisted)` is the eagerly materialized distributed
-    * fallback.
-    */
   /** Driver-heap budget for [[collectBounded]], in estimated COLLECTED
     * bytes (boxed Rows, not parquet bytes). A row-count bound alone is
     * not a memory bound: 10M rows of two longs pass a 10M-row cap but
@@ -148,10 +140,21 @@ object Layout {
       : Long =
     48L + schema.fields.map(f => 16L + f.dataType.defaultSize.toLong).sum
 
+  /** Count-then-collect under a driver-heap guard. The effective row
+    * cap is min(`maxRows`, budget ÷ estimated boxed-row bytes), the
+    * budget being [[CollectBudgetKey]]. `df` is persisted first and the
+    * count materializes it; then
+    *   - `Right(rows)` when the count fits the cap: the collect reads
+    *     that cache and releases it, so nothing stays pinned (a frame
+    *     the caller had already persisted shares the one cache entry,
+    *     so it is released too);
+    *   - `Left(persisted)` past the cap: the eagerly materialized
+    *     frame comes back still pinned, and the caller owns its
+    *     unpersist.
+    */
   def collectBounded(df: DataFrame, maxRows: Long)
-      : Either[DataFrame, Array[org.apache.spark.sql.Row]] = {
-    val persisted =
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      : Either[DataFrame, Array[Row]] = {
+    val persisted = df.persist(StorageLevel.MEMORY_AND_DISK)
     // count-then-collect, deliberately: an A/B against a single
     // limit(maxRows+1).collect() probe REGRESSED the loop-heavy
     // queries (g09 3.7 → 5.3 s, g11 4.0 → 5.1 s at sf0.1) —
@@ -168,6 +171,90 @@ object Layout {
       Right(rows)
     } else Left(persisted)
   }
+
+  /** Row bound of every driver gate ([[gate]]) and of the bounded
+    * collects that continue one (the Louvain levels); [[collectBounded]]
+    * additionally caps it by the byte budget.
+    */
+  val GateRows = 10000000L
+
+  /** [[gate]]'s default column-type check: every column BIGINT. The
+    * driver replicas read `getLong`, and the gated ops are generic, so
+    * a caller with other key types keeps the distributed path.
+    */
+  val allBigint: Seq[DataType] => Boolean = _.forall(_ == LongType)
+
+  /** DRIVER GATE: run an op as exact driver algebra over the collected
+    * rows of `frame` while they are bounded, else as its distributed
+    * twin. The decision, in order:
+    *   - `accepts` checks the column types (default [[allBigint]]); on
+    *     a refusal `distributed(frame)` runs and no job is launched;
+    *   - one [[collectBounded]] at [[GateRows]] and the byte budget; past
+    *     it `distributed` gets the PINNED frame, already materialized by
+    *     the count;
+    *   - a null anywhere in the rows runs `distributed(frame)`: a null
+    *     never equi-joins and groupBy keeps a null key group, frame
+    *     semantics the replicas do not model;
+    *   - otherwise `local(rows)`; `None` declines (seeds that do not
+    *     collect, say) and runs `distributed(frame)`.
+    * The pin is released once `distributed` returns, so the result must
+    * not read it lazily ([[gateCached]] hands it to the result instead).
+    * A frame the caller had persisted stays persisted on every branch;
+    * when `frame` itself is that frame, the fits branch drops its
+    * blocks (collectBounded shares the cache entry) and its next use
+    * recomputes them. Specs force the distributed path by setting [[CollectBudgetKey]]
+    * to 1.
+    */
+  def gate[A](frame: DataFrame, accepts: Seq[DataType] => Boolean = allBigint)
+      (local: Array[Row] => Option[A])(distributed: DataFrame => A): A = {
+    val (out, pin) = gated(frame, accepts, local, distributed)
+    pin.foreach(_.unpersist(blocking = false))
+    out
+  }
+
+  /** [[gate]] for ops returning a [[Cached]] handle: the pin joins the
+    * distributed result's `backing`, so `release()` frees it after the
+    * consuming action.
+    */
+  def gateCached(frame: DataFrame,
+                 accepts: Seq[DataType] => Boolean = allBigint)
+      (local: Array[Row] => Option[DataFrame])
+      (distributed: DataFrame => Cached): Cached = {
+    val (out, pin) = gated(frame, accepts,
+      rows => local(rows).map(Cached(_, Seq.empty)), distributed)
+    out.copy(backing = out.backing ++ pin)
+  }
+
+  /** [[gate]] with no continuation: the gated rows, or None. */
+  def gateRows(frame: DataFrame,
+               accepts: Seq[DataType] => Boolean = allBigint)
+      : Option[Array[Row]] =
+    gate[Option[Array[Row]]](frame, accepts)(rows => Some(Some(rows)))(
+      _ => None)
+
+  /** [[gate]]'s decision. The pin comes back beside the result when the
+    * gate made it, and not when the caller had persisted `frame`.
+    */
+  private def gated[A](frame: DataFrame,
+                       accepts: Seq[DataType] => Boolean,
+                       local: Array[Row] => Option[A],
+                       distributed: DataFrame => A)
+      : (A, Option[DataFrame]) =
+    if (!accepts(frame.schema.map(_.dataType))) (distributed(frame), None)
+    else {
+      val callerLevel = frame.storageLevel
+      val callerPinned = callerLevel != StorageLevel.NONE
+      collectBounded(frame, GateRows) match {
+        case Right(rows) =>
+          // collectBounded released the cache entry a caller-persisted
+          // frame shares: register it again
+          if (callerPinned) frame.persist(callerLevel)
+          val out = if (rows.exists(_.anyNull)) None else local(rows)
+          (out.getOrElse(distributed(frame)), None)
+        case Left(pinned) =>
+          (distributed(pinned), if (callerPinned) None else Some(pinned))
+      }
+    }
 
   /** Per-key populations above the cap — ≤ rows/maxBucket keys and
     * usually empty, so the guard join broadcasts under AQE.

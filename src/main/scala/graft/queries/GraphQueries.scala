@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.{Community, Layout}
+
 /** Fraud-ring graph analytics over the events stream (ops/Graph.scala):
   * project a user↔attribute bipartite graph (users sharing the same
   * `props.k` repeatedly) onto user–user edges, then ask the standard
@@ -32,6 +34,20 @@ object GraphQueries extends QuerySet {
   private def seeds(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).filter(col("user_id") % 37 === 0)
       .select(col("user_id").as("node")).distinct()
+
+  private val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  /** The Louvain family's fine-level driver gate (g14–g17): `local`
+    * runs on the co-attribute edge list collected and lifted to w = 1;
+    * `distributed` gets the (u, v) frame, pinned when the collect
+    * refused ([[Layout.gate]]).
+    */
+  private def fineGate(s: SparkSession, d: String)(
+      local: Array[Community.Local.E] => DataFrame)(
+      distributed: DataFrame => DataFrame): DataFrame =
+    Layout.gate(edges(s, d).select(col("u"), col("v")))(rows =>
+      Some(local(rows.map(r => (r.getLong(0), r.getLong(1), 1L)))))(
+      distributed)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "g01_coattr_edges" -> ((s, d) =>
@@ -69,33 +85,29 @@ object GraphQueries extends QuerySet {
       // stats run as driver Long algebra (Community.Local — the g17
       // engine pushed down to level 1); the distributed r13 path is
       // the past-bound fallback
-      graft.ops.Community.localFineEdges(edges(s, d)) match {
-        case Right(es) =>
-          val sw = graft.ops.Community.Local.sweep(es, downOnly = false)
-          val membMap = sw.iterator.map(t => (t._1, t._2)).toMap
-          val stats = graft.ops.Community.Local.stats(es, membMap)
-          s.createDataFrame(stats.toSeq)
-            .toDF("comm", "n_nodes", "e_in", "d_sum", "q_num")
-            .orderBy(col("comm"))
-        case Left(eSrc) =>
-          val e = eSrc
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // r13: the singleton start runs the algebraically-specialized
-          // fast path (no membership joins to an identity map, no
-          // symmetrize/distinct scaffold — Community doc). The sweep
-          // output feeds THREE stats subtrees (d_sum + both ends of the
-          // intra-edge join) — node-bounded LOCAL pin (persist alone kept
-          // the whole sweep subtree in each consumer's logical plan, the
-          // g13 "blocks, not plans" lesson)
-          val memb = graft.ops.Layout.materializeBounded(
-            graft.ops.Community.greedyMoveFromSingletons(e)
-              .select(col("node"), col("comm")), maxRows = 10000000L)
-          val out = graft.ops.Community.modularityStats(e, memb)
-            .orderBy(col("comm"))
-          val pinned = graft.ops.Layout.materializeBounded(out,
-            maxRows = 1000000L)
-          e.unpersist(blocking = false)
-          pinned
+      fineGate(s, d) { es =>
+        val sw = Community.Local.sweep(es, downOnly = false)
+        val membMap = sw.iterator.map(t => (t._1, t._2)).toMap
+        val stats = Community.Local.stats(es, membMap)
+        s.createDataFrame(stats.toSeq)
+          .toDF("comm", "n_nodes", "e_in", "d_sum", "q_num")
+          .orderBy(col("comm"))
+      } { src =>
+        val e = src.persist(disk)
+        // r13: the singleton start runs the algebraically-specialized
+        // fast path (no membership joins to an identity map, no
+        // symmetrize/distinct scaffold — Community doc). The sweep
+        // output feeds THREE stats subtrees (d_sum + both ends of the
+        // intra-edge join) — node-bounded LOCAL pin (persist alone kept
+        // the whole sweep subtree in each consumer's logical plan, the
+        // g13 "blocks, not plans" lesson)
+        val memb = Layout.materializeBounded(
+          Community.greedyMoveFromSingletons(e)
+            .select(col("node"), col("comm")), maxRows = Layout.GateRows)
+        val out = Community.modularityStats(e, memb).orderBy(col("comm"))
+        val pinned = Layout.materializeBounded(out, maxRows = 1000000L)
+        e.unpersist(blocking = false)
+        pinned
       }),
 
     // One synchronous Louvain-style sweep from singletons (the
@@ -107,22 +119,18 @@ object GraphQueries extends QuerySet {
     "g15_community_move" -> ((s, d) =>
       // r14: driver-algebra sweep on the bounded fine edge list
       // (CommunitySpec pins Local.sweep ≡ the frame sweep)
-      graft.ops.Community.localFineEdges(edges(s, d)) match {
-        case Right(es) =>
-          val sw = graft.ops.Community.Local.sweep(es, downOnly = false)
-          s.createDataFrame(sw.toSeq).toDF("node", "comm", "moved")
-            .orderBy(col("node"))
-        case Left(eSrc) =>
-          val e = eSrc
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // r13: singleton fast path — same (node, comm, moved) frame from
-          // a third of the plan (Community doc; CommunitySpec pins equality)
-          val out = graft.ops.Community.greedyMoveFromSingletons(e)
-            .orderBy(col("node"))
-          val pinned = graft.ops.Layout.materializeBounded(out,
-            maxRows = 1000000L)
-          e.unpersist(blocking = false)
-          pinned
+      fineGate(s, d) { es =>
+        val sw = Community.Local.sweep(es, downOnly = false)
+        s.createDataFrame(sw.toSeq).toDF("node", "comm", "moved")
+          .orderBy(col("node"))
+      } { src =>
+        val e = src.persist(disk)
+        // r13: singleton fast path — same (node, comm, moved) frame from
+        // a third of the plan (Community doc; CommunitySpec pins equality)
+        val out = Community.greedyMoveFromSingletons(e).orderBy(col("node"))
+        val pinned = Layout.materializeBounded(out, maxRows = 1000000L)
+        e.unpersist(blocking = false)
+        pinned
       }),
 
     // Two chained local-move sweeps (the Louvain inner loop iterated):
@@ -136,41 +144,37 @@ object GraphQueries extends QuerySet {
       // singleton sweep, round 2 the GENERAL move pass
       // (Community.Local.movePass, CommunitySpec-pinned against the
       // frame general sweep)
-      graft.ops.Community.localFineEdges(edges(s, d)) match {
-        case Right(es) =>
-          val sw1 = graft.ops.Community.Local.sweep(es, downOnly = false)
-          val memb1 = sw1.iterator.map(t => (t._1, t._2)).toMap
-          val m2 = graft.ops.Community.Local.movePass(es, memb1,
-            downOnly = false)
-          val rows = sw1.indices.map { i =>
-            val (n, c1, _) = sw1(i)
-            val (n2, c2, mv) = m2(i)
-            require(n == n2, "sweep/movePass universe mismatch")
-            (n, c1, c2, mv)
-          }
-          s.createDataFrame(rows)
-            .toDF("node", "comm1", "comm2", "moved2")
-            .orderBy(col("node"))
-        case Left(eSrc) =>
-          val e = eSrc
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // r13: round 1 on the singleton fast path; memb1 pins as a
-          // node-bounded LOCAL relation — the general round-2 sweep reads
-          // its membership FOUR times, and the old persist left four
-          // copies of the whole round-1 subtree in the logical plan (the
-          // g13 "blocks, not plans" lesson — this was most of g16's cost)
-          val memb1 = graft.ops.Layout.materializeBounded(
-            graft.ops.Community.greedyMoveFromSingletons(e)
-              .select(col("node"), col("comm")), maxRows = 10000000L)
-          val m2 = graft.ops.Community.greedyMovePass(e, memb1)
-          val out = memb1.withColumnRenamed("comm", "comm1")
-            .join(m2.select(col("node"), col("comm").as("comm2"),
-              col("moved").as("moved2")), Seq("node"))
-            .orderBy(col("node"))
-          val pinned = graft.ops.Layout.materializeBounded(out,
-            maxRows = 1000000L)
-          e.unpersist(blocking = false)
-          pinned
+      fineGate(s, d) { es =>
+        val sw1 = Community.Local.sweep(es, downOnly = false)
+        val memb1 = sw1.iterator.map(t => (t._1, t._2)).toMap
+        val m2 = Community.Local.movePass(es, memb1, downOnly = false)
+        val rows = sw1.indices.map { i =>
+          val (n, c1, _) = sw1(i)
+          val (n2, c2, mv) = m2(i)
+          require(n == n2, "sweep/movePass universe mismatch")
+          (n, c1, c2, mv)
+        }
+        s.createDataFrame(rows)
+          .toDF("node", "comm1", "comm2", "moved2")
+          .orderBy(col("node"))
+      } { src =>
+        val e = src.persist(disk)
+        // r13: round 1 on the singleton fast path; memb1 pins as a
+        // node-bounded LOCAL relation — the general round-2 sweep reads
+        // its membership FOUR times, and the old persist left four
+        // copies of the whole round-1 subtree in the logical plan (the
+        // g13 "blocks, not plans" lesson — this was most of g16's cost)
+        val memb1 = Layout.materializeBounded(
+          Community.greedyMoveFromSingletons(e)
+            .select(col("node"), col("comm")), maxRows = Layout.GateRows)
+        val m2 = Community.greedyMovePass(e, memb1)
+        val out = memb1.withColumnRenamed("comm", "comm1")
+          .join(m2.select(col("node"), col("comm").as("comm2"),
+            col("moved").as("moved2")), Seq("node"))
+          .orderBy(col("node"))
+        val pinned = Layout.materializeBounded(out, maxRows = 1000000L)
+        e.unpersist(blocking = false)
+        pinned
       }),
 
     // Full Louvain step: level-1 local-move sweep, then COARSEN
@@ -181,85 +185,70 @@ object GraphQueries extends QuerySet {
     // (downOnly — the synchronous-swap breaker). Emits the level-2
     // community stats plus both levels' modularity numerators and the
     // improved flag, all integer, all hash-exact.
-    "g17_louvain_coarsen" -> ((s, d) =>
+    "g17_louvain_coarsen" -> ((s, d) => {
+      // level 2 on a collected coarse graph: exact Long algebra
+      // (Community.Local — the louvain r13 engine); values identical to
+      // the frame ops, oracle-pinned
+      def level2(ce: Array[Community.Local.E]): DataFrame = {
+        val q1v = Community.Local.qNum(ce)
+        val sw = Community.Local.sweep(ce, downOnly = true)
+        val membMap = sw.iterator.map(t => (t._1, t._2)).toMap
+        val stats = Community.Local.stats(ce, membMap)
+        val q2v = stats.iterator.map(x => BigInt(x._5)).sum
+        require(q2v.isValidLong, s"q2 total overflows Int64: $q2v")
+        s.createDataFrame(stats.toSeq)
+          .toDF("comm", "n_nodes", "e_in", "d_sum", "q_num")
+          .withColumn("q1_total", lit(q1v))
+          .withColumn("q2_total", lit(q2v.toLong))
+          .withColumn("improved", col("q2_total") >= col("q1_total"))
+          .orderBy(col("comm"))
+      }
       // r14: whole step as driver Long algebra when the FINE list is
       // bounded (level 1 included — the r13 gate only went local from
-      // the coarse graph); Left = the r13 distributed/driver hybrid
-      graft.ops.Community.localFineEdges(edges(s, d)) match {
-        case Right(esf) =>
-          val L = graft.ops.Community.Local
-          val sw1 = L.sweep(esf, downOnly = false)
-          val memb1 = sw1.iterator.map(t => (t._1, t._2)).toMap
-          val ce = L.coarsen(esf, memb1)
-          val q1v = L.qNum(ce)
-          val sw2 = L.sweep(ce, downOnly = true)
-          val membMap = sw2.iterator.map(t => (t._1, t._2)).toMap
-          val stats = L.stats(ce, membMap)
-          val q2v = stats.iterator.map(x => BigInt(x._5)).sum
-          require(q2v.isValidLong, s"q2 total overflows Int64: $q2v")
-          s.createDataFrame(stats.toSeq)
-            .toDF("comm", "n_nodes", "e_in", "d_sum", "q_num")
-            .withColumn("q1_total", lit(q1v))
-            .withColumn("q2_total", lit(q2v.toLong))
-            .withColumn("improved", col("q2_total") >= col("q1_total"))
-            .orderBy(col("comm"))
-        case Left(eSrc) =>
-          // the r13 distributed/driver-hybrid path, unchanged — every
-          // stage boundary CUTS lineage (materializeBounded, all
-          // node/community-bounded frames): each level-2 operator reads
-          // its inputs many times, so persisted-but-unpruned plans here
-          // multiply the level-1 sweep subtree ~50x into the analyzer —
-          // measured as a driver OOM before the cuts (the g13 lesson).
-          // Both sweeps run the singleton fast path, and q1 is priced
-          // on the COARSE graph — singletonQNum(ce) equals the fine
-          // stats total by coarsening exactness (the spec'd invariant) —
-          // one degree pass over ce instead of three joins over e.
-          val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-          val e = eSrc.persist(disk)
-          val memb1 = graft.ops.Layout.materializeBounded(
-        graft.ops.Community.greedyMoveFromSingletons(e)
-          .select(col("node"), col("comm")), maxRows = 10000000L)
-      val out = graft.ops.Layout.collectBounded(
-          graft.ops.Community.coarsen(e, memb1), maxRows = 10000000L) match {
-        case Right(rows) =>
-          // community-bounded coarse graph on the driver: level 2 is
-          // exact Long algebra (Community.Local — the louvain r13
-          // engine); values identical to the frame ops, oracle-pinned
-          val es = graft.ops.Community.Local.fromRows(rows)
-          val q1v = graft.ops.Community.Local.qNum(es)
-          val sw = graft.ops.Community.Local.sweep(es, downOnly = true)
-          val membMap = sw.iterator.map(t => (t._1, t._2)).toMap
-          val stats = graft.ops.Community.Local.stats(es, membMap)
-          val q2v = stats.iterator.map(s => BigInt(s._5)).sum
-          require(q2v.isValidLong, s"q2 total overflows Int64: $q2v")
-          s.createDataFrame(stats.toSeq)
-            .toDF("comm", "n_nodes", "e_in", "d_sum", "q_num")
-            .withColumn("q1_total", lit(q1v))
-            .withColumn("q2_total", lit(q2v.toLong))
-            .withColumn("improved", col("q2_total") >= col("q1_total"))
-            .orderBy(col("comm"))
-        case Left(ce) =>
-          // distributed fallback (coarse graph past the bound)
-          val q1v = graft.ops.Community.singletonQNum(ce)
-          val memb2 = graft.ops.Layout.materializeBounded(
-            graft.ops.Community.greedyMoveFromSingletonsW(ce,
-              downOnly = true)
-              .select(col("node"), col("comm")), maxRows = 10000000L)
-          // stats2 feeds the q2 total AND the output rows — eager pin
-          val stats2 = graft.ops.Layout.materializeBounded(
-            graft.ops.Community.modularityStatsW(ce, memb2),
-            maxRows = 1000000L)
-          val q2 = stats2.agg(sum(col("q_num")).as("q2_total"))
-          stats2
-            .withColumn("q1_total", lit(q1v))
-            .crossJoin(broadcast(q2))
-            .withColumn("improved", col("q2_total") >= col("q1_total"))
-            .orderBy(col("comm"))
+      // the coarse graph); the fallback is the r13 distributed/driver
+      // hybrid
+      fineGate(s, d) { esf =>
+        val sw1 = Community.Local.sweep(esf, downOnly = false)
+        level2(Community.Local.coarsen(esf,
+          sw1.iterator.map(t => (t._1, t._2)).toMap))
+      } { src =>
+        // the r13 distributed/driver-hybrid path, unchanged — every
+        // stage boundary CUTS lineage (materializeBounded, all
+        // node/community-bounded frames): each level-2 operator reads
+        // its inputs many times, so persisted-but-unpruned plans here
+        // multiply the level-1 sweep subtree ~50x into the analyzer —
+        // measured as a driver OOM before the cuts (the g13 lesson).
+        // Both sweeps run the singleton fast path, and q1 is priced
+        // on the COARSE graph — singletonQNum(ce) equals the fine
+        // stats total by coarsening exactness (the spec'd invariant) —
+        // one degree pass over ce instead of three joins over e.
+        val e = src.persist(disk)
+        val memb1 = Layout.materializeBounded(
+          Community.greedyMoveFromSingletons(e)
+            .select(col("node"), col("comm")), maxRows = Layout.GateRows)
+        val out = Layout.collectBounded(Community.coarsen(e, memb1),
+            maxRows = Layout.GateRows) match {
+          case Right(rows) => level2(Community.Local.fromRows(rows))
+          case Left(ce) =>
+            // distributed fallback (coarse graph past the bound)
+            val q1v = Community.singletonQNum(ce)
+            val memb2 = Layout.materializeBounded(
+              Community.greedyMoveFromSingletonsW(ce, downOnly = true)
+                .select(col("node"), col("comm")), maxRows = Layout.GateRows)
+            // stats2 feeds the q2 total AND the output rows — eager pin
+            val stats2 = Layout.materializeBounded(
+              Community.modularityStatsW(ce, memb2), maxRows = 1000000L)
+            val q2 = stats2.agg(sum(col("q_num")).as("q2_total"))
+            stats2
+              .withColumn("q1_total", lit(q1v))
+              .crossJoin(broadcast(q2))
+              .withColumn("improved", col("q2_total") >= col("q1_total"))
+              .orderBy(col("comm"))
+        }
+        val pinned = Layout.materializeBounded(out, maxRows = 1000000L)
+        e.unpersist(blocking = false)
+        pinned
       }
-      val pinned = graft.ops.Layout.materializeBounded(out,
-        maxRows = 1000000L)
-      e.unpersist(blocking = false)
-      pinned
     }),
 
     // FULL Louvain to convergence (r12 mandate #4): sweep -> coarsen
@@ -270,12 +259,10 @@ object GraphQueries extends QuerySet {
     // three levels unconditionally (the fixed-point argument makes
     // that equal to the early-stopped loop).
     "g18_louvain_full" -> ((s, d) => {
-      val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val e = edges(s, d).persist(disk)
-      val out = graft.ops.Community.louvain(e, maxLevels = 3)
+      val out = Community.louvain(e, maxLevels = 3)
         .membership.orderBy(col("node"))
-      val pinned = graft.ops.Layout.materializeBounded(out,
-        maxRows = 10000000L)
+      val pinned = Layout.materializeBounded(out, maxRows = Layout.GateRows)
       e.unpersist(blocking = false)
       pinned
     }),
@@ -287,12 +274,10 @@ object GraphQueries extends QuerySet {
     // partition modularity). Unexecuted post-convergence levels are
     // absent — the termination rule is on the oracle.
     "g18b_louvain_trace" -> ((s, d) => {
-      val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val e = edges(s, d).persist(disk)
-      val out = graft.ops.Community.louvain(e, maxLevels = 3)
+      val out = Community.louvain(e, maxLevels = 3)
         .trace.orderBy(col("level"))
-      val pinned = graft.ops.Layout.materializeBounded(out,
-        maxRows = 1000L)
+      val pinned = Layout.materializeBounded(out, maxRows = 1000L)
       e.unpersist(blocking = false)
       pinned
     }),

@@ -25,7 +25,8 @@ QS="${2:?usage: adjudicate_aa.sh <baseline-sha> <q1,q2,...>}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 WT=/tmp/graft_aa
 SF="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+# an explicit SPARK_GRAFT_CPUS wins; otherwise the host's core count
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 REPS="${SPARK_GRAFT_REPS:-3}"
 
 if [ ! -d "$WT" ]; then
