@@ -150,19 +150,19 @@ object AnalyticsQueries extends QuerySet {
     // counts must reproduce the batch answer bit for bit.
     "st20_stream_eval_metrics" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      def src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet").parquet(d)
-      // streaming state-partition sizing (the st07 rule): both states
-      // are domain-bounded (~1k / ~20k rows), so 2 partitions, not 32
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
       val qn1 = "st20_preagg_sink"
       val qn2 = "st20_hist_sink"
-      // the two states run as CONCURRENT queries over the same source —
-      // the production shape (one app, N stateful consumers of one
-      // topic), and at bench time the two parse passes overlap instead
-      // of serializing (11.0 → 6.5 s at sf0.1)
-      try {
+      // streaming state-partition sizing (the st07 rule): both states
+      // are domain-bounded (~1k / ~20k rows), so Tables.streamParts, not
+      // the batch default. The two states run as CONCURRENT queries over
+      // the same source — the production shape (one app, N stateful
+      // consumers of one topic), and at bench time the two parse passes
+      // overlap instead of serializing (11.0 → 6.5 s at sf0.1) — so
+      // this is not a single Tables.drain
+      val (preagg, hist) = Tables.isolated(s,
+          "spark.sql.shuffle.partitions" -> Tables.streamParts) { c =>
+        def src = c.readStream.schema(schema)
+          .option("pathGlobFilter", "orders.parquet").parquet(d)
         val q1 = parsedBlocks(src)
           .groupBy(col("location"), col("typ"),
             col("actual_fraud"), col("predicted_fraud"))
@@ -179,10 +179,10 @@ object AnalyticsQueries extends QuerySet {
           .outputMode("complete").start()
         try { q1.processAllAvailable(); q2.processAllAvailable() }
         finally { q1.stop(); q2.stop() }
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      evalBattery(s.table(qn1))
-        .crossJoin(broadcast(
-          graft.ops.Aggregates.thresholdBattery(s.table(qn2))))
+        (c.table(qn1), c.table(qn2))
+      }
+      evalBattery(preagg)
+        .crossJoin(broadcast(graft.ops.Aggregates.thresholdBattery(hist)))
     }),
 
     // Cohort retention: bucket each user by first-touch day, count

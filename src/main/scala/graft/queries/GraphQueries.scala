@@ -370,20 +370,15 @@ object GraphQueries extends QuerySet {
     // GraphSpec: the BFS's per-hop cuts write and re-read real
     // checkpoint files, and the result must be identical to the
     // local-block mode (the toggle changes fault tolerance, never
-    // semantics). The cuts run eagerly inside khopReach, so the
-    // conf restore below happens after they have all executed; the
-    // files stay readable for the verifier's later parquet dump.
-    "g04_khop_reach" -> ((s, d) => {
-      val prev = s.conf.getOption(graft.ops.Checkpoints.ConfKey)
-      s.conf.set(graft.ops.Checkpoints.ConfKey,
-        Tables.stageDir(s, "g04_ckpt"))
-      try graft.ops.Graph.khopReach(edges(s, d), seeds(s, d), maxHops = 2)
-        .orderBy(col("hops"), col("node"))
-      finally prev match {
-        case Some(v) => s.conf.set(graft.ops.Checkpoints.ConfKey, v)
-        case None => s.conf.unset(graft.ops.Checkpoints.ConfKey)
-      }
-    })
+    // semantics). The cuts run eagerly inside khopReach, on a child
+    // session that carries the checkpoint key; the files stay
+    // readable for the verifier's later parquet dump.
+    "g04_khop_reach" -> ((s, d) =>
+      Tables.isolated(s, graft.ops.Checkpoints.ConfKey ->
+          Tables.stageDir(s, "g04_ckpt")) { c =>
+        graft.ops.Graph.khopReach(edges(c, d), seeds(c, d), maxHops = 2)
+          .orderBy(col("hops"), col("node"))
+      })
   )
 
   // shared oracle prelude: qualified (user, attr) pairs and the

@@ -163,15 +163,13 @@ object MlQueries extends QuerySet {
       // stage replanning dominates). Whole-stage codegen STAYS ON:
       // measured A/B at sf0.1, disabling it regressed 9.1s → 18.5s —
       // MLlib's transform/eval stages repeat enough that the compiled
-      // code pays for its janino compile even on tiny data. All
-      // restored after; this block documents the SMALL-data stance —
-      // the 100 TB stance is the inverse (wide partitions).
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "1")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val raw = TransactionGen.batch(s, 2000, seed = 42, partitions = 1)
+      // code pays for its janino compile even on tiny data. Both
+      // confs apply to a child session only; this block documents the
+      // SMALL-data stance — the 100 TB stance is the inverse (wide
+      // partitions).
+      Tables.isolated(s, "spark.sql.shuffle.partitions" -> "1",
+          "spark.sql.adaptive.enabled" -> "false") { c =>
+        val raw = TransactionGen.batch(c, 2000, seed = 42, partitions = 1)
         TrainingJob.run(raw, outDir = None, fast = true)
           .metrics
           .select(col("model"), round(col("accuracy"), 2).as("accuracy"),
@@ -179,9 +177,6 @@ object MlQueries extends QuerySet {
             round(col("matthews_corrcoef"), 4).as("mcc"))
           .orderBy(col("model"))
           .localCheckpoint(true) // materialize under the tuned confs
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.adaptive.enabled", prevAqe)
       }
     }),
 

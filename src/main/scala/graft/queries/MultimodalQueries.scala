@@ -251,29 +251,26 @@ object MultimodalQueries extends QuerySet {
     // fingerprints must equal the batch pipeline's — replay never
     // double-counts, twins collapse onto their bases.
     "st17_stream_image_dedup" -> ((s, d) => {
-      import s.implicits._
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val qn = "st17_img_dedup_sink"
-      def ids = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(d)
-        // CAP: fixture
-        .filter(col("doc_id") < 100).select(col("doc_id")).as[Long]
-      val media = ids.union(ids)
-        .flatMap { id =>
-          val base = Seq((id, nearDupRaster(id)))
-          if (id < 50) base :+ ((id + 100000L, nearDupRaster(id + 100000L)))
-          else base
-        }.toDF("media_id", "bytes")
-      val q = Multimodal.dhashImages(media, poolFactor = 2)
-        .dropDuplicates("sim")
-        .groupBy()
-        .agg(count(lit(1)).as("n_unique"),
-          expr("bit_xor(sim)").as("hash_xor"),
-          min(col("sim")).as("hash_min"), max(col("sim")).as("hash_max"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+      Tables.drain(s, "st17_img_dedup_sink", "complete") { c =>
+        import c.implicits._
+        def ids = c.readStream.schema(schema)
+          .option("pathGlobFilter", "documents.parquet").parquet(d)
+          // CAP: fixture
+          .filter(col("doc_id") < 100).select(col("doc_id")).as[Long]
+        val media = ids.union(ids)
+          .flatMap { id =>
+            val base = Seq((id, nearDupRaster(id)))
+            if (id < 50) base :+ ((id + 100000L, nearDupRaster(id + 100000L)))
+            else base
+          }.toDF("media_id", "bytes")
+        Multimodal.dhashImages(media, poolFactor = 2)
+          .dropDuplicates("sim")
+          .groupBy()
+          .agg(count(lit(1)).as("n_unique"),
+            expr("bit_xor(sim)").as("hash_xor"),
+            min(col("sim")).as("hash_min"), max(col("sim")).as("hash_max"))
+      }
     }),
 
     "mm01_decode_resize" -> ((s, d) => {

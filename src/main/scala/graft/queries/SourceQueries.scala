@@ -14,6 +14,9 @@ object SourceQueries extends QuerySet {
 
   private val enStop = graft.ops.TextAnalysis.langStopwords("en")
 
+  // state-partition override for stateful drains: see st07
+  private def stateParts = "spark.sql.shuffle.partitions" -> Tables.streamParts
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S3/S4/F7/F8/F17: deterministic generator. Not DuckDB-expressible
     // (Spark's rand stream) — no oracle entry; the driver records a
@@ -50,14 +53,11 @@ object SourceQueries extends QuerySet {
     // bounded source).
     "st01_stream_counters" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st01_counters_sink"
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn).orderBy(col("event_type"))
+      Tables.drain(s, "st01_counters_sink", "complete") { c =>
+        c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .groupBy(col("event_type")).agg(count(lit(1)).as("cnt"))
+      }.orderBy(col("event_type"))
     }),
 
     // Event-time tumbling windows + watermark over the events stream
@@ -66,20 +66,15 @@ object SourceQueries extends QuerySet {
     // Complete mode on a bounded source ≡ the batch per-hour rollup.
     "st02_stream_window" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st02_window_sink"
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .withColumn("t",
-          timestamp_micros(Tables.tsMicros(schema("ts").dataType)))
-        .withWatermark("t", "10 minutes")
-      val q = src
-        .groupBy(window(col("t"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
-        .select(unix_timestamp(col("window.start")).as("ws"),
+      Tables.drain(s, "st02_window_sink", "complete") { c =>
+        c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .withColumn("t",
+            timestamp_micros(Tables.tsMicros(schema("ts").dataType)))
+          .withWatermark("t", "10 minutes")
+          .groupBy(window(col("t"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("cnt"))
+      }.select(unix_timestamp(col("window.start")).as("ws"),
           col("event_type"), col("cnt"))
         .orderBy(col("ws"), col("event_type"))
     }),
@@ -90,19 +85,16 @@ object SourceQueries extends QuerySet {
     // per segment. Complete mode on a bounded source ≡ the batch join.
     "st03_stream_static_join" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val cust = s.read.parquet(s"$d/customer.parquet")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val qn = "st03_join_sink"
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .withColumn("ck", col("user_id") % 1000 + 1)
-        .join(cust, col("ck") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n"), sum(col("user_id")).as("uid_sum"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn).orderBy(col("c_mktsegment"))
+      Tables.drain(s, "st03_join_sink", "complete") { c =>
+        val cust = c.read.parquet(s"$d/customer.parquet")
+          .select(col("c_custkey"), col("c_mktsegment"))
+        c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .withColumn("ck", col("user_id") % 1000 + 1)
+          .join(cust, col("ck") === col("c_custkey"))
+          .groupBy(col("c_mktsegment"))
+          .agg(count(lit(1)).as("n"), sum(col("user_id")).as("uid_sum"))
+      }.orderBy(col("c_mktsegment"))
     }),
 
     // Streaming deduplication: the stream unions with itself (every
@@ -114,17 +106,14 @@ object SourceQueries extends QuerySet {
     // oracle-comparable.
     "st04_stream_dedup" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st04_dedup_sink"
-      def src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-      val q = src.union(src)
-        .dropDuplicates("event_id")
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn).orderBy(col("event_type"))
+      Tables.drain(s, "st04_dedup_sink", "complete") { c =>
+        def src = c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+        src.union(src)
+          .dropDuplicates("event_id")
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"))
+      }.orderBy(col("event_type"))
     }),
 
     // Streaming MinHash-LSH dedup (§2.6 × the dedup layer): documents
@@ -138,26 +127,24 @@ object SourceQueries extends QuerySet {
     // min id in all of its buckets.
     "st05_stream_lsh_dedup" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val qn = "st05_dedup_sink"
-      // doc_id bound = the d02b convention: the portable md5 signature
-      // is the interpreted parity kernel, so the verify/bench corpus is
-      // bounded (no-op at sf0.01; at sf0.1 it caps the md5 volume) —
-      // the XXH64 production mode has no bound
-      def src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(d)
-        .select(col("doc_id"), col("text"))
-        // CAP: baseline cover=d02_minhash_lsh
-        .filter(col("doc_id") < 1000)
-      def withPlanted = src.union(src.filter(col("doc_id") % 4 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          expr("substring(text, instr(text, ' ') + 1)").as("text")))
-      val verdicts = graft.streaming.StreamDedup.bandVerdicts(
-        withPlanted.union(withPlanted), "text", "doc_id",
-        shingleSize = 3, numHashes = 8, bands = 4, portable = true)
-      val q = verdicts.toDF.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      graft.streaming.StreamDedup.keptIds(s.table(qn))
+      val verdicts = Tables.drain(s, "st05_dedup_sink", "append") { c =>
+        // doc_id bound = the d02b convention: the portable md5 signature
+        // is the interpreted parity kernel, so the verify/bench corpus is
+        // bounded (no-op at sf0.01; at sf0.1 it caps the md5 volume) —
+        // the XXH64 production mode has no bound
+        def src = c.readStream.schema(schema)
+          .option("pathGlobFilter", "documents.parquet").parquet(d)
+          .select(col("doc_id"), col("text"))
+          // CAP: baseline cover=d02_minhash_lsh
+          .filter(col("doc_id") < 1000)
+        def withPlanted = src.union(src.filter(col("doc_id") % 4 === 0)
+          .select((col("doc_id") + 1000000).as("doc_id"),
+            expr("substring(text, instr(text, ' ') + 1)").as("text")))
+        graft.streaming.StreamDedup.bandVerdicts(
+          withPlanted.union(withPlanted), "text", "doc_id",
+          shingleSize = 3, numHashes = 8, bands = 4, portable = true).toDF
+      }
+      graft.streaming.StreamDedup.keptIds(verdicts)
         .agg(count(lit(1)).as("n_kept"),
           sum(when(col("id") >= 1000000, 1L).otherwise(0L))
             .as("n_copies_kept"),
@@ -171,20 +158,17 @@ object SourceQueries extends QuerySet {
     // before anything is persisted; bounded source ≡ the batch battery.
     "st06_stream_quality" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val qn = "st06_quality_sink"
       val g = graft.ops.TextAnalysis.gopherRules(col("text"),
         graft.ops.TextAnalysis.langStopwords("en"), minWords = 30)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(d)
-        .select(col("lang"), g.as("g"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("g.pass"), 1L).otherwise(0L)).as("n_pass"),
-          sum(when(!col("g.stopword_ok"), 1L).otherwise(0L)).as("f_stop"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn).orderBy(col("lang"))
+      Tables.drain(s, "st06_quality_sink", "complete") { c =>
+        c.readStream.schema(schema)
+          .option("pathGlobFilter", "documents.parquet").parquet(d)
+          .select(col("lang"), g.as("g"))
+          .groupBy(col("lang"))
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("g.pass"), 1L).otherwise(0L)).as("n_pass"),
+            sum(when(!col("g.stopword_ok"), 1L).otherwise(0L)).as("f_stop"))
+      }.orderBy(col("lang"))
     }),
 
     // Stream-stream join (§2.6): click→purchase attribution — each
@@ -196,16 +180,7 @@ object SourceQueries extends QuerySet {
     // oracle states; times run on epoch-µs (j09's NANOS convention).
     "st07_stream_stream_join" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st07_join_sink"
-      def src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
       val tsUs = Tables.tsMicros(schema("ts").dataType)
-      val clicks = src.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          timestamp_micros(tsUs).as("ct"))
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          timestamp_micros(tsUs).as("pt"))
       // a stream-stream join commits FOUR state stores per shuffle
       // partition per micro-batch; partition count is pinned at query
       // start, so size it to the state volume (arrival rate × horizon),
@@ -217,21 +192,22 @@ object SourceQueries extends QuerySet {
       // 3.58→3.32→2.58 s and st08 7.71→6.10→5.00 s — the store-commit
       // floor halves with the partition count while results are
       // partition-independent (all 20 st oracles re-verified green).
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = graft.streaming.Attribution.intervalJoin(
+      Tables.drain(s, "st07_join_sink", "append", stateParts) { c =>
+        def src = c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+        val clicks = src.filter(col("event_type") === "click")
+          .select(col("event_id").as("click_id"), col("user_id"),
+            timestamp_micros(tsUs).as("ct"))
+        val purchases = src.filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"), col("user_id"),
+            timestamp_micros(tsUs).as("pt"))
+        graft.streaming.Attribution.intervalJoin(
             clicks, purchases, keyCol = "user_id",
             leftTimeCol = "ct", rightTimeCol = "pt",
             horizon = "10 minutes", watermark = "30 minutes")
           .select(col("click_id"), col("purchase_id"),
             (unix_micros(col("pt")) - unix_micros(col("ct"))).as("gap_us"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(expr("gap_us div 60000000").as("gap_min"))
+      }.groupBy(expr("gap_us div 60000000").as("gap_min"))
         .agg(count(lit(1)).as("n_pairs"),
           sum(col("click_id")).cast("long").as("click_checksum"),
           sum(col("purchase_id")).cast("long").as("purchase_checksum"))
@@ -281,18 +257,17 @@ object SourceQueries extends QuerySet {
       sentinels(1L).write.mode("append").parquet(stage)
       val schema = s.read.parquet(stage).schema
       val qn = "st08_outer_sink"
-      def src = s.readStream.schema(schema).parquet(stage)
-      val clicks = src.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          timestamp_micros(col("ts_us")).as("ct"))
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          timestamp_micros(col("ts_us")).as("pt"))
       // state-partition sizing: see st07 — the outer join pays the
-      // four-store commit cost on EVERY one of its three micro-batches
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
+      // four-store commit cost on EVERY one of its micro-batches. Not a
+      // plain drain: the round-2 sentinels land between two drains.
+      Tables.isolated(s, stateParts) { c =>
+        def src = c.readStream.schema(schema).parquet(stage)
+        val clicks = src.filter(col("event_type") === "click")
+          .select(col("event_id").as("click_id"), col("user_id"),
+            timestamp_micros(col("ts_us")).as("ct"))
+        val purchases = src.filter(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"), col("user_id"),
+            timestamp_micros(col("ts_us")).as("pt"))
         val q = graft.streaming.Attribution.intervalJoin(
             clicks, purchases, keyCol = "user_id",
             leftTimeCol = "ct", rightTimeCol = "pt",
@@ -313,9 +288,8 @@ object SourceQueries extends QuerySet {
           q.processAllAvailable() // batch 2: sentinel₂ applies the
                                   // batch-1 watermark and evicts
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .filter(col("click_id") >= 0L)
+        c.table(qn)
+      }.filter(col("click_id") >= 0L)
         .groupBy(coalesce(expr("gap_us div 60000000"), lit(-1L))
           .cast("long").as("gap_min"))
         .agg(count(lit(1)).as("n_rows"),
@@ -357,23 +331,15 @@ object SourceQueries extends QuerySet {
       stageOne(odd.filter(col("ts_us") >= thrUs), "b1", base - 120000)
       stageOne(odd.filter(col("ts_us") < thrUs), "b2", base - 60000)
       val schema = s.read.parquet(s"$stage/b0.parquet").schema
-      val qn = "st19_late_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = s.readStream.schema(schema)
+      Tables.drain(s, "st19_late_sink", "append", stateParts) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
           .withColumn("t", timestamp_micros(col("ts_us")))
           .withWatermark("t", "10 minutes")
           .groupBy(window(col("t"), "1 hour"))
           .agg(count(lit(1)).as("cnt"),
             sum(col("user_id")).as("uid_sum"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .select(unix_timestamp(col("window.start")).as("ws"),
+      }.select(unix_timestamp(col("window.start")).as("ws"),
           col("cnt"), col("uid_sum").cast("long").as("uid_sum"))
         .orderBy(col("ws"))
     }),
@@ -392,22 +358,15 @@ object SourceQueries extends QuerySet {
         .select(col("ts_us"), col("user_id"))
         .coalesce(4).write.mode("overwrite").parquet(stage)
       val schema = s.read.parquet(stage).schema
-      val qn = "st09_session_sink"
       // state-partition sizing: see st07
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = s.readStream.schema(schema)
+      Tables.drain(s, "st09_session_sink", "complete", stateParts) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
           .withColumn("t", timestamp_micros(col("ts_us")))
           .withWatermark("t", "10 minutes")
           .groupBy(session_window(col("t"), "30 minutes"), col("user_id"))
           .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn).agg(
+      }.agg(
         count(lit(1)).as("n_sessions"),
         sum(col("n")).cast("long").as("n_events"),
         max(col("n")).as("max_events"),
@@ -435,7 +394,6 @@ object SourceQueries extends QuerySet {
     // oracle SQL).
     "st18_stream_conformal" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-      val qn = "st18_conformal_sink"
       val model = Seq("x_qty" -> 0.08, "x_disc" -> -12.0, "x_tax" -> 6.5)
       def feats(df: org.apache.spark.sql.DataFrame) = df.select(
         col("l_orderkey"),
@@ -443,46 +401,33 @@ object SourceQueries extends QuerySet {
         col("l_quantity").cast("double").as("x_qty"),
         col("l_discount").cast("double").as("x_disc"),
         col("l_tax").cast("double").as("x_tax"))
-      val stats = graft.ops.Conformal.calibrationStats(
-        graft.ml.Models.scoreLogistic(
-          feats(s.read.parquet(s"$d/lineitem.parquet")), model,
-          intercept = -2.0),
-        "label", "proba", "l_orderkey")
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet").parquet(d)
-      val flags = graft.ops.Conformal.servingFlags(
-        graft.ml.Models.scoreLogistic(feats(src), model,
-          intercept = -2.0),
-        stats, "label", "proba", "l_orderkey")
-        .select(col("__ncal"), col("__k"), col("__q7"), col("__sy"),
-          col("__c1"), col("__c0"))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = flags.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      graft.ops.Conformal.auditAgg(s.table(qn))
+      graft.ops.Conformal.auditAgg(
+        Tables.drain(s, "st18_conformal_sink", "append", stateParts) { c =>
+          val stats = graft.ops.Conformal.calibrationStats(
+            graft.ml.Models.scoreLogistic(
+              feats(c.read.parquet(s"$d/lineitem.parquet")), model,
+              intercept = -2.0),
+            "label", "proba", "l_orderkey")
+          val src = c.readStream.schema(schema)
+            .option("pathGlobFilter", "lineitem.parquet").parquet(d)
+          graft.ops.Conformal.servingFlags(
+            graft.ml.Models.scoreLogistic(feats(src), model,
+              intercept = -2.0),
+            stats, "label", "proba", "l_orderkey")
+            .select(col("__ncal"), col("__k"), col("__q7"), col("__sy"),
+              col("__c1"), col("__c0"))
+        })
     }),
 
     "st14_stream_ewma" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st14_ewma_sink"
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .withColumn("ts_us", Tables.tsMicros(schema("ts").dataType))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = graft.streaming.StreamVelocity.ewmaStates(
-            src, "user_id", "ts_us", "event_id", "value")
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("user").as("user_id"))
+      Tables.drain(s, "st14_ewma_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .withColumn("ts_us", Tables.tsMicros(schema("ts").dataType))
+        graft.streaming.StreamVelocity.ewmaStates(
+          src, "user_id", "ts_us", "event_id", "value").toDF
+      }.groupBy(col("user").as("user_id"))
         .agg(max(col("n")).as("n_events"),
           max_by(col("ewma"), col("n")).as("ewma"))
         .orderBy(col("user_id"))
@@ -494,22 +439,14 @@ object SourceQueries extends QuerySet {
     // result identically (same oracle SQL).
     "st15_stream_cusum" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st15_cusum_sink"
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .withColumn("ts_us", Tables.tsMicros(schema("ts").dataType))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = graft.streaming.StreamVelocity.cusumStates(
-            src, "user_id", "ts_us", "event_id", "value",
-            targetCents = 5000L, hCents = 20000L)
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("user").as("user_id"))
+      Tables.drain(s, "st15_cusum_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .withColumn("ts_us", Tables.tsMicros(schema("ts").dataType))
+        graft.streaming.StreamVelocity.cusumStates(
+          src, "user_id", "ts_us", "event_id", "value",
+          targetCents = 5000L, hCents = 20000L).toDF
+      }.groupBy(col("user").as("user_id"))
         .agg(max(col("n")).as("n_events"),
           max_by(col("alarms"), col("n")).as("alarms"),
           max_by(col("sp"), col("n")).as("sp_cents"),
@@ -519,23 +456,15 @@ object SourceQueries extends QuerySet {
 
     "st10_stream_velocity" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st10_velocity_sink"
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .withColumn("ts_us", Tables.tsMicros(schema("ts").dataType))
       // state-partition sizing: see st07
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = graft.streaming.StreamVelocity.trailingCounts(
-            src, "user_id", "ts_us", "event_type",
-            windowMicros = 3600L * 1000000L)
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("tag").as("event_type"))
+      Tables.drain(s, "st10_velocity_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .withColumn("ts_us", Tables.tsMicros(schema("ts").dataType))
+        graft.streaming.StreamVelocity.trailingCounts(
+          src, "user_id", "ts_us", "event_type",
+          windowMicros = 3600L * 1000000L).toDF
+      }.groupBy(col("tag").as("event_type"))
         .agg(count(lit(1)).as("n"),
           max(col("velN")).cast("long").as("max_vel"),
           sum(when(col("velN") >= 3, 1L).otherwise(0L)).as("n_burst"),
@@ -583,21 +512,13 @@ object SourceQueries extends QuerySet {
           .withColumn("event_type", lit(null).cast("string")),
         "b3", base - 60000)
       val schema = s.read.parquet(s"$stage/b0.parquet").schema
-      val qn = "st23_reorder_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      Tables.drain(s, "st23_reorder_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamVelocity.trailingCounts(
-            src, "user_id", "ts_us", "event_type",
-            windowMicros = 3600L * 1000000L, maxLateness = lateUs)
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("tag").as("event_type"))
+        graft.streaming.StreamVelocity.trailingCounts(
+          src, "user_id", "ts_us", "event_type",
+          windowMicros = 3600L * 1000000L, maxLateness = lateUs).toDF
+      }.groupBy(col("tag").as("event_type"))
         .agg(count(lit(1)).as("n"),
           max(col("velN")).cast("long").as("max_vel"),
           sum(when(col("velN") >= 3, 1L).otherwise(0L)).as("n_burst"),
@@ -624,20 +545,14 @@ object SourceQueries extends QuerySet {
           col("value").cast("double").as("v"))
       raw.coalesce(4).write.mode("overwrite").parquet(stage)
       val schema = s.read.parquet(stage).schema
-      val qn = "st25_kll_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = s.readStream.schema(schema)
+      val sink = Tables.drain(s, "st25_kll_sink", "complete", stateParts) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
           .groupBy(col("grp"))
           .agg(graft.functions.KllSketchAgg.kllQuantiles(
             col("v"), 512, Seq(10, 25, 50, 75, 90, 99)).as("q"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      MetricsQueries.kllGate(s.table(qn), raw, capacity = 512)
+      }
+      MetricsQueries.kllGate(sink, raw, capacity = 512)
     }),
 
     // §2.6 × a49, through the STATE STORE (r11 verdict mandate #7):
@@ -658,20 +573,15 @@ object SourceQueries extends QuerySet {
           col("value").cast("double").as("v"))
       raw.coalesce(4).write.mode("overwrite").parquet(stage)
       val schema = s.read.parquet(stage).schema
-      val qn = "st30_kll_state_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      val sink = Tables.drain(s, "st30_kll_state_sink", "append",
+          stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamVelocity.kllQuantileStates(
-            src, "grp", "v", capacity = 512,
-            percents = Seq(10, 25, 50, 75, 90, 99))
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      val finalTick = s.table(qn).groupBy(col("grp"))
+        graft.streaming.StreamVelocity.kllQuantileStates(
+          src, "grp", "v", capacity = 512,
+          percents = Seq(10, 25, 50, 75, 90, 99)).toDF
+      }
+      val finalTick = sink.groupBy(col("grp"))
         .agg(max_by(col("q"), col("n")).as("q"))
       MetricsQueries.kllGate(finalTick, raw, capacity = 512)
     }),
@@ -693,19 +603,14 @@ object SourceQueries extends QuerySet {
             "ELSE user_id END").as("item"))
       raw.coalesce(4).write.mode("overwrite").parquet(stage)
       val schema = s.read.parquet(stage).schema
-      val qn = "st31_hh_state_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      val sink = Tables.drain(s, "st31_hh_state_sink", "append",
+          stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamSketch.hhStates(
-            src, "grp", "item", k = 64)
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      val finalTick = s.table(qn).groupBy(col("grp"))
+        graft.streaming.StreamSketch.hhStates(
+          src, "grp", "item", k = 64).toDF
+      }
+      val finalTick = sink.groupBy(col("grp"))
         .agg(max_by(col("hh"), col("n")).as("hh"))
       MetricsQueries.hhGate(finalTick, raw, k = 64)
     }),
@@ -732,20 +637,12 @@ object SourceQueries extends QuerySet {
           s"b$i", base - 240000 + i * 60000)
       }
       val schema = s.read.parquet(s"$stage/b0.parquet").schema
-      val qn = "st32_pack_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      Tables.drain(s, "st32_pack_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamPack.chunkPackStates(
-            src, "doc_id", "ntok", capacity = 512L, nShards = 8)
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("shard"))
+        graft.streaming.StreamPack.chunkPackStates(
+          src, "doc_id", "ntok", capacity = 512L, nShards = 8).toDF
+      }.groupBy(col("shard"))
         .agg(max(col("nDocs")).as("n_docs"),
           max_by(col("nTokens"), col("nDocs")).as("n_tokens"),
           max_by(col("nBins"), col("nDocs")).as("n_bins"),
@@ -776,20 +673,12 @@ object SourceQueries extends QuerySet {
           s"b$i", base - 240000 + i * 60000)
       }
       val schema = s.read.parquet(s"$stage/b0.parquet").schema
-      val qn = "st33_nf_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      Tables.drain(s, "st33_nf_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamPack.nextFitStates(
-            src, "doc_id", "ntok", capacity = 512L, nShards = 8)
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("shard"))
+        graft.streaming.StreamPack.nextFitStates(
+          src, "doc_id", "ntok", capacity = 512L, nShards = 8).toDF
+      }.groupBy(col("shard"))
         .agg(max(col("nDocs")).as("n_docs"),
           max_by(col("nTokens"), col("nDocs")).as("n_tokens"),
           max_by(col("nBins"), col("nDocs")).as("n_bins"),
@@ -815,20 +704,14 @@ object SourceQueries extends QuerySet {
             "ELSE user_id END").as("item"))
       raw.coalesce(4).write.mode("overwrite").parquet(stage)
       val schema = s.read.parquet(stage).schema
-      val qn = "st26_hh_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = s.readStream.schema(schema)
+      val sink = Tables.drain(s, "st26_hh_sink", "complete", stateParts) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
           .groupBy(col("grp"))
           .agg(graft.functions.HeavyHittersAgg.heavyHitters(
             col("item"), 64).as("hh"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      MetricsQueries.hhGate(s.table(qn), raw, k = 64)
+      }
+      MetricsQueries.hhGate(sink, raw, k = 64)
     }),
 
     // §2.6 streaming AMS F₂ (a51's batch sketch as streaming state):
@@ -844,20 +727,14 @@ object SourceQueries extends QuerySet {
         .select(col("event_type").as("grp"), col("user_id").as("item"))
       raw.coalesce(4).write.mode("overwrite").parquet(stage)
       val schema = s.read.parquet(stage).schema
-      val qn = "st27_ams_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val q = s.readStream.schema(schema)
+      val sink = Tables.drain(s, "st27_ams_sink", "complete", stateParts) { c =>
+        c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
           .groupBy(col("grp"))
           .agg(graft.functions.AmsSketchAgg.amsSketch(
             col("item"), 64).as("z"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      MetricsQueries.amsGate(s.table(qn), raw, r = 64)
+      }
+      MetricsQueries.amsGate(sink, raw, r = 64)
     }),
 
     // §2.6 streaming Holt (w21's level+trend fold as streaming state):
@@ -883,20 +760,12 @@ object SourceQueries extends QuerySet {
           s"b$i", base - 240000 + i * 60000)
       }
       val schema = s.read.parquet(s"$stage/b0.parquet").schema
-      val qn = "st28_holt_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      Tables.drain(s, "st28_holt_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamVelocity.holtStates(
-            src, "event_type", "day", "cents")
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("grp").as("event_type"))
+        graft.streaming.StreamVelocity.holtStates(
+          src, "event_type", "day", "cents").toDF
+      }.groupBy(col("grp").as("event_type"))
         .agg(max(col("n")).as("n_days"),
           max_by(col("l"), col("n")).as("level_fp"),
           max_by(col("b"), col("n")).as("trend_fp"))
@@ -929,20 +798,12 @@ object SourceQueries extends QuerySet {
           s"b$i", base - 240000 + i * 60000)
       }
       val schema = s.read.parquet(s"$stage/b0.parquet").schema
-      val qn = "st29_hw_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      Tables.drain(s, "st29_hw_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamVelocity.hwStates(
-            src, "event_type", "day", "cents")
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("grp").as("event_type"))
+        graft.streaming.StreamVelocity.hwStates(
+          src, "event_type", "day", "cents").toDF
+      }.groupBy(col("grp").as("event_type"))
         .agg(max(col("n")).as("n_days"),
           max_by(col("l"), col("n")).as("level_fp"),
           max_by(col("b"), col("n")).as("trend_fp"),
@@ -994,21 +855,13 @@ object SourceQueries extends QuerySet {
             lit(null).cast(ev.schema("value").dataType)),
         "b3", base - 60000)
       val schema = s.read.parquet(s"$stage/b0.parquet").schema
-      val qn = "st24_reorder_sink"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", Tables.streamParts)
-      try {
-        val src = s.readStream.schema(schema)
+      Tables.drain(s, "st24_reorder_sink", "append", stateParts) { c =>
+        val src = c.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(stage)
-        val q = graft.streaming.StreamVelocity.ewmaStates(
-            src, "user_id", "ts_us", "event_id", "value",
-            maxLateness = lateUs)
-          .toDF.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn)
-        .groupBy(col("user").as("user_id"))
+        graft.streaming.StreamVelocity.ewmaStates(
+          src, "user_id", "ts_us", "event_id", "value",
+          maxLateness = lateUs).toDF
+      }.groupBy(col("user").as("user_id"))
         .agg(max(col("n")).as("n_events"),
           max_by(col("ewma"), col("n")).as("ewma"),
           max(col("ooo")).as("ooo_max"))
@@ -1026,17 +879,15 @@ object SourceQueries extends QuerySet {
     // bit-exactly (a20b's integer-arithmetic recipe).
     "st11_stream_distinct" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st11_distinct_sink"
       val (reg, rank) = graft.ops.Aggregates.hllRegRank("user_id")
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .filter(col("user_id").isNotNull)
-        .select(reg.as("reg"), rank.as("rk"))
-        .groupBy(col("reg")).agg(max(col("rk")).as("r"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      graft.ops.Aggregates.hllEstimateFromRegisters(s.table(qn))
+      graft.ops.Aggregates.hllEstimateFromRegisters(
+        Tables.drain(s, "st11_distinct_sink", "complete") { c =>
+          c.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet").parquet(d)
+            .filter(col("user_id").isNotNull)
+            .select(reg.as("reg"), rank.as("rk"))
+            .groupBy(col("reg")).agg(max(col("rk")).as("r"))
+        })
     }),
 
     // Streaming heavy hitters at constant state (§2.6 × a20c): the
@@ -1049,16 +900,13 @@ object SourceQueries extends QuerySet {
     // streamed cells must equal batch cells bit-exactly.
     "st12_stream_heavy_hitters" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st12_cms_sink"
-      val q = graft.ops.Aggregates.cmsCells(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(d),
-        "user_id")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      graft.ops.Aggregates.cmsProbeTopK(s.table(qn),
-        Tables.events(s, d), "user_id")
+      val cells = Tables.drain(s, "st12_cms_sink", "complete") { c =>
+        graft.ops.Aggregates.cmsCells(
+          c.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet").parquet(d),
+          "user_id")
+      }
+      graft.ops.Aggregates.cmsProbeTopK(cells, Tables.events(s, d), "user_id")
     }),
 
     // Streaming A/B significance: the 2×2 (variant, conv) cell counts
@@ -1068,18 +916,15 @@ object SourceQueries extends QuerySet {
     // ≡ batch bit-for-bit under a32's oracle.
     "st21_stream_ab_test" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st21_ab_sink"
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .filter(col("user_id").isNotNull)
-        .select((col("user_id") % 2).cast("int").as("variant"),
-          (col("event_type") === "purchase").cast("int").as("conv"))
-        .groupBy(col("variant"), col("conv"))
-        .agg(count(lit(1)).as("cnt"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      val cells = s.table(qn)
+      val cells = Tables.drain(s, "st21_ab_sink", "complete") { c =>
+        c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .filter(col("user_id").isNotNull)
+          .select((col("user_id") % 2).cast("int").as("variant"),
+            (col("event_type") === "purchase").cast("int").as("conv"))
+          .groupBy(col("variant"), col("conv"))
+          .agg(count(lit(1)).as("cnt"))
+      }
       graft.ops.Aggregates.abTestFromCounts(cells.agg(
         sum(when(col("variant") === 0 && col("conv") === 0, col("cnt"))
           .otherwise(0L)).as("a0n"),
@@ -1100,18 +945,15 @@ object SourceQueries extends QuerySet {
     // recipe verbatim, so streamed counts must equal batch bit-exactly.
     "st22_stream_gini" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st22_gini_sink"
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .filter(col("event_type").isNotNull && col("value").isNotNull)
-        .select(col("event_type").as("__g"),
-          round(col("value") * 100).cast("bigint").as("__v"))
-        .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      graft.ops.Aggregates.giniFromHist(s.table(qn))
-        .orderBy(col("grp"))
+      graft.ops.Aggregates.giniFromHist(
+        Tables.drain(s, "st22_gini_sink", "complete") { c =>
+          c.readStream.schema(schema)
+            .option("pathGlobFilter", "events.parquet").parquet(d)
+            .filter(col("event_type").isNotNull && col("value").isNotNull)
+            .select(col("event_type").as("__g"),
+              round(col("value") * 100).cast("bigint").as("__v"))
+            .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c"))
+        }).orderBy(col("grp"))
     }),
 
     // Streaming Benford screen (§2.6 × a29): the (type, digit)
@@ -1121,20 +963,17 @@ object SourceQueries extends QuerySet {
     // counts must equal batch counts bit-exactly.
     "st16_stream_benford" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st16_benford_sink"
       val cents = round(col("value") * 100).cast("long")
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        // rounded-cents gate (a29 discipline): (0, 0.005) rounds to 0
-        // cents whose digit 0 would blow up the expected-share table
-        .filter(col("value").isNotNull && cents >= 1)
-        .select(col("event_type").as("grp"),
-          substring(cents.cast("string"), 1, 1).cast("int").as("digit"))
-        .groupBy(col("grp"), col("digit")).agg(count(lit(1)).as("obs"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      val counts = s.table(qn)
+      val counts = Tables.drain(s, "st16_benford_sink", "complete") { c =>
+        c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          // rounded-cents gate (a29 discipline): (0, 0.005) rounds to 0
+          // cents whose digit 0 would blow up the expected-share table
+          .filter(col("value").isNotNull && cents >= 1)
+          .select(col("event_type").as("grp"),
+            substring(cents.cast("string"), 1, 1).cast("int").as("digit"))
+          .groupBy(col("grp"), col("digit")).agg(count(lit(1)).as("obs"))
+      }
       val tot = counts.groupBy(col("grp").as("gt"))
         .agg(sum(col("obs")).as("n"))
       counts.join(broadcast(tot), col("grp") === col("gt"))
@@ -1159,18 +998,16 @@ object SourceQueries extends QuerySet {
     // first-rank rule; DuckDB replays histogram AND rule bit-exactly.
     "st13_stream_histogram" -> ((s, d) => {
       val schema = s.read.parquet(s"$d/events.parquet").schema
-      val qn = "st13_hist_sink"
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d)
-        .filter(col("value").isNotNull)
-        .select(col("event_type").as("grp"),
-          least(greatest(floor(col("value") / 25).cast("int"), lit(0)),
-            lit(63)).as("bucket"))
-        .groupBy(col("grp"), col("bucket")).agg(count(lit(1)).as("c"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      graft.ops.Aggregates.histogramQuantiles(s.table(qn), Seq(50, 90, 99))
+      val hist = Tables.drain(s, "st13_hist_sink", "complete") { c =>
+        c.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(d)
+          .filter(col("value").isNotNull)
+          .select(col("event_type").as("grp"),
+            least(greatest(floor(col("value") / 25).cast("int"), lit(0)),
+              lit(63)).as("bucket"))
+          .groupBy(col("grp"), col("bucket")).agg(count(lit(1)).as("c"))
+      }
+      graft.ops.Aggregates.histogramQuantiles(hist, Seq(50, 90, 99))
         .orderBy(col("grp"), col("q"))
     }),
 
