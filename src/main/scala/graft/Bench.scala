@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -8,42 +7,7 @@ object Bench {
     // min of `reps` full passes so per-query numbers reflect the code,
     // not a noisy-neighbor moment, and record the load average alongside
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fall back to per-operator execution (compiled expressions, JIT-able)
-      // for stages whose fused processNext would exceed HotSpot's 8000-byte
-      // JIT ceiling and run as interpreted bytecode (~50x slower).
-      // Env-overridable for the codegen A/B (SPARK_GRAFT_HUGE_LIMIT=65535
-      // restores Spark's default ceiling).
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_LIMIT", "8000"))
-      // the cartesian interlock is ON for every benched plan (mirrors
-      // Verify): an unhinted cross join fails loudly at plan time.
-      // SPARK_GRAFT_EXTENSIONS=none drops the injection entirely — the
-      // knob exists to A/B the interlock's own planning cost
-      .config("spark.sql.extensions",
-        sys.env.getOrElse("SPARK_GRAFT_EXTENSIONS", "graft.GraftExtensions")
-          match { case "none" => "" case e => e })
-      .config(graft.plans.CartesianGuard.ConfKey,
-        sys.env.getOrElse("SPARK_GRAFT_FAIL_CARTESIAN", "true"))
-      // env-overridable for the streaming state-store A/B
-      // (SPARK_GRAFT_STATESTORE=rocksdb swaps the provider for the
-      // 19-query st family; default = Spark's HDFS-backed in-memory
-      // provider)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.get("SPARK_GRAFT_STATESTORE") match {
-          case Some("rocksdb") => "org.apache.spark.sql.execution." +
-            "streaming.state.RocksDBStateStoreProvider"
-          case Some(other) => other
-          case None => "org.apache.spark.sql.execution.streaming." +
-            "state.HDFSBackedStateStoreProvider"
-        })
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.Jobs.session("graft-bench")
     // optional filter for profiling: SPARK_GRAFT_ONLY=q1,q2
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints `explain("formatted")` for the named queries
   * (or all), for pushdown/broadcast/codegen review — the per-operator
   * "would this plan survive 100×?" audit loop.
   *
   * Usage: runMain graft.Explain <sfDir> [query...]
+  *
+  * Plans under the serving session ([[graft.jobs.Jobs.session]]); the
+  * recorded `plans/` files were taken at `SPARK_GRAFT_CPUS=8`.
   *
   * When specific queries are named they are also EXECUTED and the
   * post-AQE plan is printed with shuffle/broadcast/reuse counts (the
@@ -19,18 +20,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val execute = args.length > 1
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fall back to per-operator execution (compiled expressions, JIT-able)
-      // for stages whose fused processNext would exceed HotSpot's 8000-byte
-      // JIT ceiling and run as interpreted bytecode (~50x slower)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.Jobs.session("graft-explain")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try {

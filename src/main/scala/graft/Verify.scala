@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read as epoch-nanos long (queries convert explicitly).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fall back to per-operator execution (compiled expressions, JIT-able)
-      // for stages whose fused processNext would exceed HotSpot's 8000-byte
-      // JIT ceiling and run as interpreted bytecode (~50x slower)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      // the 100-TB cartesian interlock planning EVERY driver query:
-      // an unhinted cross join anywhere in the 249-query surface now
-      // fails at plan time instead of surviving local[32] and dying
-      // on a cluster (r7 verdict: "until then the interlock is a
-      // claim, not a gate")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(graft.plans.CartesianGuard.ConfKey, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.Jobs.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // a thrown query is a hard failure: record it, keep dumping the
     // rest, and exit nonzero at the end — r4 proved a stderr line alone

@@ -14,7 +14,7 @@ import graft.streaming.{Scorer, WireFormat}
   * the reference maps each script onto one main:
   *
   *   `python model.py`     → `graft.jobs.TrainMain <csv|gen:N> <modelDir>`
-  *   `python producer.py`  → `graft.jobs.ProduceMain <outDir|kafka:host:topic> [n] [rate]`
+  *   `python producer.py`  → `graft.jobs.ProduceMain <outDir|kafka:host:topic> [rate] [seconds]`
   *   `python consumer.py`  → `graft.jobs.ScoreMain <srcDir|kafka:host:topic> <modelDir> <sinkDir>`
   *   `python dashboard.py` → `graft.jobs.MetricsMain <sinkDir>` (read path)
   *
@@ -23,6 +23,12 @@ import graft.streaming.{Scorer, WireFormat}
   * deploy classpath.
   */
 object Jobs {
+  /** The one session builder for every main — the serving jobs, Verify,
+    * Bench, Explain, the probes and ScaleUp — so the suite and the
+    * oracle check the program configured exactly as it serves.
+    * `SPARK_GRAFT_CPUS` (default 4) sets the local thread count and the
+    * shuffle partitions; `SPARK_GRAFT_MASTER` overrides the master.
+    */
   def session(app: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val s = SparkSession.builder()
@@ -31,7 +37,18 @@ object Jobs {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // events.parquet has carried TIMESTAMP(NANOS), which Spark rejects
+      // by default; read it as epoch-nanos long (queries convert)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // fall back to per-operator execution (compiled expressions,
+      // JIT-able) for stages whose fused processNext would exceed
+      // HotSpot's 8000-byte JIT ceiling and run interpreted (~50x slower)
+      .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      // the cartesian interlock plans every query: an unhinted cross
+      // join fails at plan time instead of surviving local mode and
+      // dying on a cluster
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(graft.plans.CartesianGuard.ConfKey, "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -59,8 +76,9 @@ object TrainMain {
 }
 
 /** Producer (`FD/producer.py`): rate-source transaction stream → JSON
-  * wire format → file dir (or Kafka). Runs for `--for-seconds S`
-  * (default 10) then stops.
+  * wire format → file dir (or Kafka). Positional `[rate] [seconds]`:
+  * emits `rate` rows per second (default 1) for `seconds` (default 10),
+  * then stops.
   */
 object ProduceMain {
   def main(args: Array[String]): Unit = {

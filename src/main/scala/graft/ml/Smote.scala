@@ -77,8 +77,8 @@ object Smote {
   /** Minority frame prepared for the LSH pipeline: feature vector,
     * squared norm, synthetic id — persisted (caller releases).
     */
-  private[graft] def prepare(minority: DataFrame,
-                          featureCols: Seq[String]): DataFrame = {
+  private def prepare(minority: DataFrame,
+                      featureCols: Seq[String]): DataFrame = {
     val fv = array(featureCols.map(col(_).cast("double")): _*)
     minority
       .withColumn("__fv", fv)
@@ -89,8 +89,7 @@ object Smote {
 
   /** Pre-dedup candidate pairs `(id, nbr_id, d2)` — the frame whose
     * volume is THE SMOTE scale term (the r10 probe's 184 M-row agg
-    * input); exposed package-side so SmoteProbe can A/B the volume
-    * directly. Shape notes:
+    * input). Shape notes:
     *
     * Candidate POOL side capped per (table, bucket): a pathologically
     * dense bucket stays O(|bucket| × cap), not O(|bucket|²). Points
@@ -106,10 +105,10 @@ object Smote {
     * candidate join volume they prevent. Deterministic: bucket sizes
     * and the t-ascending order are data-defined.
     */
-  private[graft] def lshCandidates(base: DataFrame, dim: Int, k: Int,
-                                numTables: Int, bucketWidth: Double,
-                                seed: Long, maxBucketCandidates: Int,
-                                candTarget: Int): DataFrame = {
+  private def lshCandidates(base: DataFrame, dim: Int, k: Int,
+                            numTables: Int, bucketWidth: Double,
+                            seed: Long, maxBucketCandidates: Int,
+                            candTarget: Int): DataFrame = {
     val rnd = new scala.util.Random(seed)
     // seeded unit-ish hyperplanes for the projection tables
     val planes: Seq[Seq[Double]] =

@@ -87,7 +87,7 @@ object CoreQueries extends QuerySet {
     // A7: last value per key (counts.log reverse scan) via max_by.
     "a07_last_per_key" -> ((s, d) =>
       Aggregates.lastPerKey(
-        // CAP: slice cover=CapProbe
+        // CAP: slice cover=a07
         Tables.events(s, d).filter(col("user_id") < 50),
         "user_id", "event_id", "value")
         .orderBy(col("user_id"))),

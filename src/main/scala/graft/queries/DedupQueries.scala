@@ -83,7 +83,7 @@ object DedupQueries extends QuerySet {
     // brute theta-join oracle.
     "d20_containment" -> ((s, d) => {
       val base = Tables.documents(s, d).select("doc_id", "text")
-        // CAP: probe cover=PrefixProbe
+        // CAP: probe cover=prefix
         .filter(col("doc_id") < 150)
       val excerpts = base
         .withColumn("doc_id", col("doc_id") + 3000000)
@@ -105,7 +105,7 @@ object DedupQueries extends QuerySet {
     // equi-join on pos-div-w blocks, volume ≤ n·(w−1) by construction.
     "d21_sorted_neighborhood" -> ((s, d) => {
       val base = Tables.documents(s, d)
-        // CAP: probe cover=SnProbe
+        // CAP: probe cover=sn
         .filter(col("doc_id") < 300)
         .select(col("doc_id"),
           array_join(slice(split(trim(lower(col("text"))), "\\s+"),
@@ -144,7 +144,7 @@ object DedupQueries extends QuerySet {
 
     "d14_setjoin_prefix" -> ((s, d) => {
       val docs = Tables.documents(s, d).select("doc_id", "text")
-        // CAP: probe cover=VocabProbe
+        // CAP: probe cover=vocab
         .filter(col("doc_id") < 400)
       val mutated = docs
         .withColumn("doc_id", col("doc_id") + 1000000)
@@ -162,7 +162,7 @@ object DedupQueries extends QuerySet {
     // edit distance, min-label closure, total mapping) replays in
     // DuckDB. Output = per-entity size and member checksum.
     "d15_entity_resolution" -> ((s, d) => {
-      // CAP: probe cover=EntityProbe
+      // CAP: probe cover=entity
       val base = Tables.documents(s, d).filter(col("doc_id") < 300)
         .select(col("doc_id"),
           array_join(slice(split(trim(lower(col("text"))), "\\s+"),
@@ -219,7 +219,7 @@ object DedupQueries extends QuerySet {
     // original — the property fixed blocks and line dedup lack.
     "d19_cdc_chunks" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-        // CAP: probe cover=d19_cdc_chunks
+        // CAP: probe cover=cdc
         .select(col("doc_id"), col("text")).filter(col("doc_id") < 300)
       val noisy = docs.select((col("doc_id") + 1000000).as("doc_id"),
         concat(lit("zq noise prefix "), col("text")).as("text"))
@@ -414,7 +414,7 @@ object DedupQueries extends QuerySet {
       // parity pipeline's candidate set grows quadratically with the
       // corpus — the production path (d04) caps buckets instead
       val docs = Tables.documents(s, d).select("doc_id", "text")
-        // CAP: probe cover=d04b_simhash_portable
+        // CAP: baseline cover=d04_simhash
         .filter(col("doc_id") < 1000)
       val mutated = docs
         .withColumn("doc_id", col("doc_id") + 1000000)

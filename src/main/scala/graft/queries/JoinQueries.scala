@@ -119,7 +119,7 @@ object JoinQueries extends QuerySet {
     "j04_asof_join" -> ((s, d) => {
       val ev = Tables.eventsMicros(s, d)
       val purchases = ev.filter(col("event_type") === "purchase" &&
-        // CAP: slice cover=CapProbe
+        // CAP: slice cover=asof
         col("user_id") < 100)
         .select("event_id", "user_id", "ts_us")
       val views = ev.filter(col("event_type") === "view")
@@ -139,7 +139,7 @@ object JoinQueries extends QuerySet {
     "j08_asof_forward" -> ((s, d) => {
       val ev = Tables.eventsMicros(s, d)
       val purchases = ev.filter(col("event_type") === "purchase" &&
-        // CAP: slice cover=CapProbe
+        // CAP: slice cover=asof
         col("user_id") < 100)
         .select("event_id", "user_id", "ts_us")
       val views = ev.filter(col("event_type") === "view")
@@ -162,7 +162,7 @@ object JoinQueries extends QuerySet {
       // epoch-µs (Tables.tsMicros) on both sides
       val ev = Tables.eventsMicros(s, d)
       val purchases = ev.filter(col("event_type") === "purchase" &&
-        // CAP: slice cover=CapProbe
+        // CAP: slice cover=asof
         col("user_id") < 100)
         .select(col("event_id"), col("user_id"), col("ts_us"))
       val views = ev.filter(col("event_type") === "view")

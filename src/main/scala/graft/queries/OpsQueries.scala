@@ -158,7 +158,7 @@ object OpsQueries extends QuerySet {
     // concat → parse back → epoch seconds (full round trip).
     "f02_parse_roundtrip" -> ((s, d) => {
       val ts = timestamp_micros(col("ts_us"))
-      // CAP: slice cover=CapProbe
+      // CAP: slice cover=f02
       Tables.eventsMicros(s, d).filter(col("user_id") < 20)
         .withColumn("ds", date_format(ts, "yyyy-MM-dd"))
         .withColumn("tstr", date_format(ts, "HH:mm:ss"))

@@ -50,7 +50,7 @@ object SamplingQueries extends QuerySet {
     // distance tree.
     "sm13_kcenter_coreset" -> ((s, d) =>
       graft.ops.Similarity.kCenterCoreset(
-        // CAP: probe cover=sm13_kcenter_coreset
+        // CAP: probe cover=coreset
         Tables.embeddings(s, d).filter(col("vec_id") < 200),
         "vec_id", "embedding", k = 5)
         .orderBy(col("pick"))),

@@ -65,7 +65,7 @@ object SimilarityQueries extends QuerySet {
     // frame via lofFromKnn.
     "n16_lof" -> ((s, d) =>
       Similarity.lofOutliers(
-        // CAP: probe cover=LofProbe
+        // CAP: probe cover=lof
         Tables.embeddings(s, d).filter(col("vec_id") < 300),
         "vec_id", "embedding", k = 5)
         .orderBy(col("vec_id"))),
@@ -79,7 +79,7 @@ object SimilarityQueries extends QuerySet {
     // in DuckDB, so the SCALE path itself is hash-checked. LofSpec
     // gates ANN-fed ≡ exact at nprobe = 2^nPlanes (recall 1.0).
     "n16b_lof_ann" -> ((s, d) => {
-      // CAP: probe cover=LofProbe
+      // CAP: probe cover=lof
       val pts = Tables.embeddings(s, d).filter(col("vec_id") < 300)
       val knn = Similarity.ivfTopKL2Portable(pts, pts,
           "vec_id", "embedding", k = 5)
@@ -124,7 +124,7 @@ object SimilarityQueries extends QuerySet {
     // frames (n04b/n02b cells), exactly n16b's composition.
     "n18_dbscan" -> ((s, d) =>
       Similarity.dbscanCached(
-        // CAP: probe cover=LofProbe
+        // CAP: probe cover=lof
         Tables.embeddings(s, d).filter(col("vec_id") < 300),
         "vec_id", "embedding", eps2 = 1.3, minPts = 3)
         .df.orderBy(col("vec_id"))),
@@ -139,7 +139,7 @@ object SimilarityQueries extends QuerySet {
     "n19_pca_power" -> ((s, d) =>
       Similarity.pcaPowerFromCov(
         Similarity.covarianceMatrixOrdered(
-          // CAP: probe cover=PcaProbe
+          // CAP: probe cover=pca
           Tables.embeddings(s, d).filter(col("vec_id") < 200),
           "vec_id", "embedding"),
         rounds = 8)),
@@ -150,7 +150,7 @@ object SimilarityQueries extends QuerySet {
     // top-20 embeddings farthest from the corpus' dominant direction.
     // One scan-local pass, two broadcast dim-row joins, no pair term.
     "n20_pca_outliers" -> ((s, d) => {
-      // CAP: probe cover=PcaProbe
+      // CAP: probe cover=pca
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 200)
       val load = Similarity.pcaPowerFromCov(
         Similarity.covarianceMatrixOrdered(emb, "vec_id", "embedding"),
@@ -201,7 +201,7 @@ object SimilarityQueries extends QuerySet {
     // the corpus max pairwise cosine is ~0.44, so this band is populated).
     "n03_cosine_neardups" -> ((s, d) =>
       Similarity.cosineNearDups(
-        // CAP: probe cover=CapProbe
+        // CAP: probe cover=lsh
         Tables.embeddings(s, d).filter(col("vec_id") < 200),
         "vec_id", "embedding", threshold = 0.35)
         .orderBy(col("id_a"), col("id_b"))),
@@ -230,7 +230,7 @@ object SimilarityQueries extends QuerySet {
     // join, and the exact-cosine verify, putting the WHOLE embedding
     // LSH pipeline on a hash-checked oracle.
     "n04b_cosine_lsh_portable" -> ((s, d) => {
-      // CAP: probe cover=CapProbe
+      // CAP: probe cover=lsh
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 200)
         .select(col("vec_id"),
           transform(col("embedding"), _.cast("double")).as("embedding"))
@@ -382,7 +382,7 @@ object SimilarityQueries extends QuerySet {
     // recipe and replays the same dot products.
     "n09_random_project" -> ((s, d) =>
       Similarity.randomProject(
-        // CAP: probe cover=CapProbe
+        // CAP: probe cover=proj
         Tables.embeddings(s, d).filter(col("vec_id") < 100),
         "vec_id", "embedding", outDim = 16, seed = 42L)
         .select(col("vec_id"), posexplode(col("proj")).as(Seq("pos", "val")))
@@ -408,7 +408,7 @@ object SimilarityQueries extends QuerySet {
     // in PipelineOpsSpec.
     "n10_embedding_cov" -> ((s, d) =>
       Similarity.covarianceMatrixOrdered(
-        // CAP: probe cover=PcaProbe
+        // CAP: probe cover=pca
         Tables.embeddings(s, d).filter(col("vec_id") < 200),
         "vec_id", "embedding")
         .orderBy(col("i"), col("j"))),

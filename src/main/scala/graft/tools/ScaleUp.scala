@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe corpus generator: writes a `factor`× testdata directory
@@ -29,15 +29,7 @@ object ScaleUp {
     val in = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.Jobs.session("graft-scaleup")
 
     // the shipped testdata is one parquet FILE per table (queries use
     // pathGlobFilter="<t>.parquet" on the dir); write a staging
@@ -96,8 +88,8 @@ object ScaleUp {
     }
     // lineitem scales too (round 10 — the r10 probe found the
     // verbatim pass-through made every lineitem-based arm vacuous:
-    // a43/a46/m22/SmoteProbe measured parquet pushdown over a FIXED
-    // table). Values stay verbatim — copies shift only the key — so
+    // a43/a46/m22 and the smote probe measured parquet pushdown over a
+    // FIXED table). Values stay verbatim — copies shift only the key — so
     // the distinct-cell histograms the a4x ops contract on stay
     // SF-invariant while row counts scale: exactly the regime the
     // histogram-discipline claims are about.
