@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
-import org.apache.spark.sql.streaming.GroupState
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 import graft.ops.{Dedup, TextAnalysis}
 
@@ -44,36 +43,35 @@ import graft.ops.{Dedup, TextAnalysis}
   * shuffle is the groupByKey on the band key, ∝ bands × docs rows of
   * (key, id) pairs.
   *
-  * BUCKET EVICTION (r11 verdict mandate #1, the
-  * [[StreamVelocity]] horizon applied to the vocabulary): with
-  * `tsCol` + `evictHorizonUs = H > 0` the claims run
-  * `GroupStateTimeout.EventTimeTimeout` — each claim re-arms its
-  * bucket's timeout at the bucket's event-time high-water mark + H,
-  * and a bucket unclaimed for a horizon EXPIRES: its winner is
-  * forgotten, so the next document to hash there claims it fresh.
-  * That is the TTL trade stated plainly: near-duplicates separated by
-  * more than the horizon are no longer linked (both kept), in
-  * exchange for state bounded by the horizon's active vocabulary
-  * instead of the corpus's. Arrivals older than the watermark
-  * (maxEventTime − H) are dropped by the engine — their bucket may
-  * already be gone. With the horizon off (0, the default) the
-  * NoTimeout path below is byte-identical to round 11.
+  * BUCKET EVICTION (r11 verdict mandate #1, the [[KeyedState]]
+  * horizon applied to the vocabulary): with `tsCol` +
+  * `evictHorizonUs = H > 0` each claim re-arms its bucket's timeout
+  * at the bucket's event-time high-water mark + H, and a bucket
+  * unclaimed for a horizon EXPIRES: its winner is forgotten, so the
+  * next document to hash there claims it fresh. That is the TTL trade
+  * stated plainly: near-duplicates separated by more than the horizon
+  * are no longer linked (both kept), in exchange for state bounded by
+  * the horizon's active vocabulary instead of the corpus's. Arrivals
+  * older than the watermark (maxEventTime − H) are dropped by the
+  * engine — their bucket may already be gone. With the horizon off
+  * (0, the default) a claim never expires and `tsCol` is not read.
+  *
+  * Dead-letter stance (as [[StreamVelocity.trailingCounts]]): a
+  * document without an id, or without an event time under eviction,
+  * has no defined claim and drops before the state function.
   */
 object StreamDedup {
 
   /** One per-band verdict: `id` wins (`ok`) or loses its bucket. */
   case class BandVerdict(id: Long, band: Int, ok: Boolean)
 
-  /** Internal band-key row shape (public: Catalyst's deserializer
-    * codegen cannot reference a private class).
+  /** Internal band-key row shape with event time (public: Catalyst's
+    * deserializer codegen cannot reference a private class).
     */
-  case class BandRow(key: String, id: Long)
-
-  /** Band-key row with event time (the eviction arm's shape). */
   case class BandRowT(key: String, id: Long, ts: Long)
 
-  /** Eviction-arm state: the bucket's winner and its event-time
-    * high-water mark (what the timeout re-arms from).
+  /** Bucket state: the bucket's winner and its event-time high-water
+    * mark (what the eviction timer re-arms from).
     */
   case class BucketState(winner: Long, hwm: Long)
 
@@ -99,9 +97,6 @@ object StreamDedup {
       "bucket eviction needs an event-time column (tsCol)")
     val spark = docs.sparkSession
     import spark.implicits._
-    if (evictHorizonUs > 0L)
-      return bandVerdictsEvict(docs, textCol, idCol, shingleSize,
-        numHashes, bands, portable, tsCol, evictHorizonUs)
     // stage shingles → signature → band keys as separate projections:
     // the signature references the shingle column numHashes times and
     // the band keys reference the signature bands times — inlined into
@@ -115,72 +110,29 @@ object StreamDedup {
     val bk =
       if (portable) Dedup.bandKeysPortable(col("sig"), bands, rowsPerBand)
       else Dedup.bandKeys(col("sig"), bands, rowsPerBand)
-    docs.select(col(idCol).cast("long").as("id"),
+    val ts = if (evictHorizonUs > 0L) col(tsCol).cast("long") else lit(0L)
+    val keyed = docs.select(col(idCol).cast("long").as("id"), ts.as("ts"),
         Dedup.shingles(TextAnalysis.tokens(col(textCol)), shingleSize)
           .as("sh"))
-      .select(col("id"), sig.as("sig"))
-      .select(col("id"), explode(bk).as("bk"))
-      .select(concat_ws("|", col("bk.band"), col("bk.bucket")).as("key"),
-        col("id"))
-      .as[BandRow]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Long, BandVerdict](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[BandRow], state: GroupState[Long]) =>
-          val band = key.substring(0, key.indexOf('|')).toInt
-          val ids = rows.map(_.id).toArray.distinct
-          val winner = state.getOption.getOrElse(ids.min)
-          if (!state.exists) state.update(winner)
-          ids.iterator.map(id => BandVerdict(id, band, id == winner))
-      }
-  }
-
-  /** Eviction arm of [[bandVerdicts]] (object doc): same claim rule,
-    * but the bucket state carries its event-time high-water mark and
-    * times out once the watermark passes hwm + horizon.
-    */
-  private def bandVerdictsEvict(
-      docs: DataFrame, textCol: String, idCol: String,
-      shingleSize: Int, numHashes: Int, bands: Int, portable: Boolean,
-      tsCol: String, evictHorizonUs: Long): Dataset[BandVerdict] = {
-    val rowsPerBand = numHashes / bands
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sig =
-      if (portable) Dedup.minhashSignaturePortable(col("sh"), numHashes)
-      else Dedup.minhashSignature(col("sh"), numHashes)
-    val bk =
-      if (portable) Dedup.bandKeysPortable(col("sig"), bands, rowsPerBand)
-      else Dedup.bandKeys(col("sig"), bands, rowsPerBand)
-    docs.select(col(idCol).cast("long").as("id"),
-        col(tsCol).cast("long").as("ts"),
-        Dedup.shingles(TextAnalysis.tokens(col(textCol)), shingleSize)
-          .as("sh"))
+      .filter(col("id").isNotNull && col("ts").isNotNull)
       .select(col("id"), col("ts"), sig.as("sig"))
       .select(col("id"), col("ts"), explode(bk).as("bk"))
       .select(concat_ws("|", col("bk.band"), col("bk.bucket")).as("key"),
-        col("id"), col("ts"),
-        timestamp_micros(col("ts")).as("__evt"))
-      .withWatermark("__evt", s"$evictHorizonUs microseconds")
-      .as[BandRowT]
+        col("id"), col("ts"))
+    KeyedState.watermark(keyed, col("ts"), evictHorizonUs).as[BandRowT]
       .groupByKey(_.key)
       .flatMapGroupsWithState[BucketState, BandVerdict](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
+        OutputMode.Append(), KeyedState.timeout(evictHorizonUs)) {
         (key: String, rows: Iterator[BandRowT],
          state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
+          KeyedState.step(state, evictHorizonUs) { prev =>
             val band = key.substring(0, key.indexOf('|')).toInt
             val arr = rows.toArray
             val ids = arr.map(_.id).distinct
-            val s0 = state.getOption.getOrElse(
-              BucketState(ids.min, Long.MinValue))
+            val s0 = prev.getOrElse(BucketState(ids.min, Long.MinValue))
             val hwm = math.max(s0.hwm, arr.map(_.ts).max)
-            state.update(BucketState(s0.winner, hwm))
-            state.setTimeoutTimestamp((hwm + evictHorizonUs) / 1000L + 1L)
-            ids.iterator.map(id => BandVerdict(id, band, id == s0.winner))
+            (BucketState(s0.winner, hwm), hwm,
+              ids.iterator.map(id => BandVerdict(id, band, id == s0.winner)))
           }
       }
   }

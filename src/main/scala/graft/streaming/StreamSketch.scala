@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 /** Misra–Gries heavy hitters as per-entity `flatMapGroupsWithState`
   * STATE — the frequency sibling of
@@ -25,26 +25,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * expression tree; long items only (the state-store shape).
   *
   * Eviction (r12 verdict mandate #1): with `evictHorizonUs > 0` (and
-  * `tsUsCol` naming the event-time column) the state runs under
-  * `EventTimeTimeout` — an entity silent past hwm + horizon drops its
-  * (n, counters) entirely and re-seeds fresh on reappearance (n
+  * `tsUsCol` naming the event-time column) the state expires by the
+  * [[KeyedState]] horizon — an entity silent past hwm + horizon drops
+  * its (n, counters) entirely and re-seeds fresh on reappearance (n
   * restarts at the new arrivals; the monitor answers "what dominates
   * THIS key's recent stream", so evicted history must not bias the
-  * estimates back in). Horizon off keeps the NoTimeout path
-  * byte-identical, so st31's oracle rows are untouched.
+  * estimates back in). With the horizon off the state never expires
+  * and `tsUsCol` is not read. Rows fold in arrival order: the
+  * retained set is order-dependent, so nothing sorts here.
   */
 object StreamSketch {
 
-  case class ItemEvent(grp: String, item: Long)
   case class ItemEventT(grp: String, item: Long, ts: Long)
   case class HhEntry(item: Long, est: Long)
   case class HhRow(grp: String, n: Long, hh: Seq[HhEntry])
-  case class HhState(n: Long, items: Map[Long, Long])
   case class HhEvState(n: Long, hwm: Long, items: Map[Long, Long])
 
   /** The Misra–Gries batch fold: `buf` mutated in place over `items`,
-    * returning the number of items folded. One body for both timeout
-    * arms.
+    * returning the number of items folded.
     */
   private def mgFold(items: Iterator[Long],
                      buf: mutable.HashMap[Long, Long], k: Int): Long = {
@@ -85,58 +83,27 @@ object StreamSketch {
         "the event-time column")
     val spark = events.sparkSession
     import spark.implicits._
-    if (evictHorizonUs > 0L)
-      events.filter(col(keyCol).isNotNull && col(itemCol).isNotNull &&
-          col(tsUsCol).isNotNull)
-        .select(col(keyCol).cast("string").as("grp"),
-          col(itemCol).cast("long").as("item"),
-          col(tsUsCol).cast("long").as("ts"),
-          timestamp_micros(col(tsUsCol).cast("long")).as("__evt"))
-        .withWatermark("__evt", s"$evictHorizonUs microseconds")
-        .as[ItemEventT] // __evt rides in the plan for the watermark
-        .groupByKey(_.grp)
-        .flatMapGroupsWithState[HhEvState, HhRow](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-          (grp: String, rows: Iterator[ItemEventT],
-           state: GroupState[HhEvState]) =>
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val s0 = state.getOption.getOrElse(
-                HhEvState(0L, Long.MinValue, Map.empty))
-              val buf = mutable.HashMap.empty[Long, Long]
-              buf ++= s0.items
-              var hwm = s0.hwm
-              val arr = rows.toArray
-              arr.foreach(r => if (r.ts > hwm) hwm = r.ts)
-              val seen = mgFold(arr.iterator.map(_.item), buf, k)
-              val n = s0.n + seen
-              state.update(HhEvState(n, hwm, buf.toMap))
-              // invoked with data here, so the re-armed timeout is
-              // always past the watermark
-              state.setTimeoutTimestamp(
-                StreamVelocity.evictAtMs(hwm, evictHorizonUs))
-              if (seen > 0L) Iterator(hhEmit(grp, n, buf))
-              else Iterator.empty
-            }
-        }
-    else
-      events.filter(col(keyCol).isNotNull && col(itemCol).isNotNull)
-        .select(col(keyCol).cast("string").as("grp"),
-          col(itemCol).cast("long").as("item"))
-        .as[ItemEvent]
-        .groupByKey(_.grp)
-        .flatMapGroupsWithState[HhState, HhRow](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-          (grp: String, rows: Iterator[ItemEvent],
-           state: GroupState[HhState]) =>
-            val s0 = state.getOption.getOrElse(HhState(0L, Map.empty))
+    val ts =
+      if (evictHorizonUs > 0L) col(tsUsCol).cast("long") else lit(Long.MinValue)
+    val rows = events.select(col(keyCol).cast("string").as("grp"),
+        col(itemCol).cast("long").as("item"), ts.as("ts"))
+      .filter(col("grp").isNotNull && col("item").isNotNull &&
+        col("ts").isNotNull)
+    KeyedState.watermark(rows, col("ts"), evictHorizonUs).as[ItemEventT]
+      .groupByKey(_.grp)
+      .flatMapGroupsWithState[HhEvState, HhRow](
+        OutputMode.Append(), KeyedState.timeout(evictHorizonUs)) {
+        (grp: String, rows: Iterator[ItemEventT],
+         state: GroupState[HhEvState]) =>
+          KeyedState.step(state, evictHorizonUs) { prev =>
+            val s0 = prev.getOrElse(HhEvState(0L, Long.MinValue, Map.empty))
             val buf = mutable.HashMap.empty[Long, Long]
             buf ++= s0.items
-            val seen = mgFold(rows.map(_.item), buf, k)
-            val n = s0.n + seen
-            state.update(HhState(n, buf.toMap))
-            if (seen > 0L) Iterator(hhEmit(grp, n, buf))
-            else Iterator.empty
-        }
+            val arr = rows.toArray
+            val hwm = arr.foldLeft(s0.hwm)((h, r) => math.max(h, r.ts))
+            val n = s0.n + mgFold(arr.iterator.map(_.item), buf, k)
+            (HhEvState(n, hwm, buf.toMap), hwm, Iterator(hhEmit(grp, n, buf)))
+          }
+      }
   }
 }

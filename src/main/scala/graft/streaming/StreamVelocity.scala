@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 /** Streaming point-in-time velocity features — the transaction-burst
   * signal (`ops/Velocity`'s trailing-window count) computed AT SERVING
@@ -20,8 +20,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State lifecycle: per-ENTITY state is bounded by rate × span, and
   * the state STORE is bounded too when the eviction horizon is on
-  * (see STATE EVICTION below) — an event-time timeout, a TESTED code
-  * path since round 12, not prose. The default (horizon off,
+  * (the [[KeyedState]] event-time timeout, a TESTED code path since
+  * round 12, not prose). The default (horizon off,
   * NoTimeout) keeps bounded-source semantics exact for the oracle
   * gate; production runs on unbounded entity churn set the horizon —
   * the same stance as [[StreamDedup]]'s bucket vocabulary.
@@ -38,106 +38,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * side by design; stage boundaries on range-partitioned time (or rely
   * on a single batch) for exact batch equivalence.
   *
-  * VIOLATION VISIBILITY (r9 verdict mandate #6): the ordered-arrival
-  * assumption is now detected, not just documented. Every state
-  * carries the per-key event-time HIGH-WATER MARK across batches; a
-  * row arriving with ts strictly below it is an out-of-order arrival
-  * (the st19 late-audit shape applied to the state family), counted in
-  * the `ooo` column every emission carries. The documented
-  * as-of-arrival semantics still apply to the values — nothing is
-  * retracted or reordered — but a production monitor alarming on
-  * `ooo > 0` sees a violated assumption instead of silently-shifted
-  * numbers. Within one batch the event-time sort makes order moot, so
-  * only cross-batch regressions count — exactly the assumption's
-  * scope.
-  *
-  * BOUNDED-LATENESS ABSORPTION (r10 verdict mandate #1): with
-  * `maxLateness = L > 0` every state in the family gains a reorder
-  * buffer — the Kafka multi-partition reality where per-key order
-  * holds only within L of event time. An event is HELD while its ts
-  * is within L of the key's high-water mark and RELEASED — folded
-  * into the state, and for [[trailingCounts]] emitted, exactly once —
-  * only when the high-water mark passes `ts + L`, in strict event-
-  * time order. Under the contract (every arrival has
-  * `ts >= hwm − L` at its batch), the released fold sequence is
-  * IDENTICAL to the fully-ordered run's: a shuffled batch schedule
-  * produces bit-equal final output (ReorderSpec proves it on the
-  * doubles). Arrivals that violate the contract (> L late) fall back
-  * to the L = 0 semantics — folded as-of-arrival, counted in `ooo` —
-  * so the old behavior is the documented fallback, not the default.
-  * Two invariants make the order proof go through: buffer entries
-  * always satisfy `ts >= hwm − L` (the release rule at the previous
-  * batch's hwm), and a release requires `ts < hwm − L` strictly, so
-  * no legal future arrival — not even a same-instant tie —
-  * can precede a released event.
-  *
-  * PUNCTUATION: a row with a NULL payload (null `tagCol` for
-  * [[trailingCounts]], null `valueCol` for [[ewmaStates]] /
-  * [[cusumStates]]) advances the key's high-water mark to its ts and
-  * releases accordingly but folds nothing and emits nothing itself —
-  * the per-key end-of-stream flush a bounded run (or a Kafka control
-  * message) uses to drain the buffer. Punctuation is only
-  * interpreted on the L > 0 path; at L = 0 the legacy null handling
-  * (drop / coalesce) is unchanged.
-  *
-  * State bound with the buffer: per-key rate × L events on top of the
-  * existing window state — the same arrival-rate bound, never corpus
-  * size.
-  *
-  * STATE EVICTION (r11 verdict mandate #1 — the unbounded-entity-churn
-  * gap): with `evictHorizonUs = H > 0` every state in the family runs
-  * `GroupStateTimeout.EventTimeTimeout` instead of NoTimeout. The
-  * engine's watermark advances as `maxEventTime − H`; each batch a
-  * key re-arms its timeout at `hwm + H` (ms resolution — the state
-  * store's clock), so a key is EVICTED — state removed, not carried —
-  * once the watermark strictly passes its own high-water mark plus
-  * the horizon. Consequences, all by design:
-  *
-  *   - total state is bounded by the entities ACTIVE within one
-  *     horizon of the stream head, not the entities ever seen — the
-  *     100-TB unbounded-churn requirement;
-  *   - arrivals older than the watermark are dropped by the engine
-  *     before the function runs (their key may already be gone);
-  *     arrivals late but within the horizon still fold as-of-arrival
-  *     and count in `ooo`, exactly the L = 0 semantics;
-  *   - an evicted key that REAPPEARS re-seeds cleanly: fresh state,
-  *     count restarting at 1, `ooo` restarting at 0 — history past
-  *     the horizon is forgotten, which is the TTL contract;
-  *   - with the horizon OFF (0, the default) nothing changes: the
-  *     NoTimeout paths below are byte-identical to round 11, so every
-  *     existing st oracle row is untouched.
-  *
-  * EVICTION × REORDER (both knobs > 0) composes, with `H ≥ L`
-  * required loudly (and `H ≥ window` for [[trailingCounts]]): a
-  * timed-out key DRAINS first — its held buffer folds and emits in
-  * strict event-time order, exactly as a punctuation at the horizon
-  * would have released it — and only then removes. The order proof
-  * survives because any future legal arrival has
-  * `ts ≥ watermark > hwm + H ≥ hwm ≥` every held timestamp, so
-  * nothing that could precede a drained event can ever arrive.
-  * Eviction is therefore a forced end-of-life punctuation, not a
-  * data loss: every held event is emitted exactly once. (Production
-  * Kafka runs want `H ≫ L` — evict at hours, reorder at minutes.)
+  * Every state in the family speaks the keyed event-time protocol of
+  * [[KeyedState]]: the per-key high-water mark and the `ooo` count
+  * every emission carries, the bounded-lateness reorder buffer
+  * (`maxLateness = L > 0`) with its null-payload PUNCTUATION (null
+  * `tagCol` for [[trailingCounts]], null `valueCol` for
+  * [[ewmaStates]] / [[cusumStates]]), and the eviction horizon
+  * (`evictHorizonUs = H > 0`, drain-then-remove when both are on).
+  * The operators here supply only their folds. The protocol's order
+  * proof needs `H ≥ L`, and [[trailingCounts]] also needs
+  * `H ≥ window` so eviction never discards a timestamp a legal
+  * arrival still counts; both are required loudly.
   */
 object StreamVelocity {
-
-  /** Timeout re-arm instant for [[GroupState.setTimeoutTimestamp]]:
-    * strictly after `hwm + horizon` at the state store's ms
-    * resolution, so the eviction rule reads "watermark PASSES the
-    * key's high-water mark + horizon". Rows reaching the function
-    * satisfy ts ≥ watermark (the engine's late filter), so this is
-    * always in the watermark's future — the setTimeoutTimestamp
-    * contract.
-    */
-  private[streaming] def evictAtMs(hwmUs: Long, horizonUs: Long): Long =
-    (hwmUs + horizonUs) / 1000L + 1L
 
   case class TaggedEvent(user: Long, ts: Long, tag: String)
   case class VelRow(user: Long, ts: Long, tag: String, velN: Int,
                     ooo: Long)
-  case class VelState(times: Seq[Long], hwm: Long, ooo: Long)
-  case class VelStateR(times: Seq[Long], buf: Seq[TaggedEvent],
-                       hwm: Long, ooo: Long)
 
   case class HoltEvent(grp: String, day: Long, cents: Long)
   case class HoltRow(grp: String, n: Long, l: Long, b: Long)
@@ -147,23 +64,37 @@ object StreamVelocity {
                    sNext: Long, sLast: Long)
   case class HwState(n: Long, l: Long, b: Long, ring: Seq[Long])
 
-  case class EwmaEvent(user: Long, ts: Long, id: Long, v: Double)
   case class EwmaEventOpt(user: Long, ts: Long, id: Long,
                           v: Option[Double])
   case class EwmaRow(user: Long, n: Long, ewma: Double, ooo: Long)
-  case class EwmaState(n: Long, ewma: Double, hwm: Long, ooo: Long)
-  case class EwmaPend(ts: Long, id: Long, v: Double)
-  case class EwmaStateR(n: Long, ewma: Double, buf: Seq[EwmaPend],
-                        hwm: Long, ooo: Long)
 
-  /** Out-of-order arrivals in this batch: rows with event time
-    * strictly below the key's cross-batch high-water mark. `sorted`
-    * is the batch's event-time-ascending array, so one binary-search-
-    * style scan of the prefix suffices — but the array is small and a
-    * simple count is clearer.
+  private def requireOrdered(maxLateness: Long, evictHorizonUs: Long): Unit = {
+    require(maxLateness >= 0L,
+      s"maxLateness must be >= 0, got $maxLateness")
+    require(evictHorizonUs >= 0L,
+      s"evictHorizonUs must be >= 0, got $evictHorizonUs")
+    require(evictHorizonUs == 0L || evictHorizonUs >= maxLateness,
+      s"evictHorizonUs ($evictHorizonUs) must cover maxLateness " +
+        s"($maxLateness): a drain must release every held event " +
+        "before any legal arrival could reorder with it (KeyedState doc)")
+  }
+
+  /** The `(user, ts, id, payload)` projection of [[ewmaStates]] and
+    * [[cusumStates]]. Rows without an entity or a clock drop. At L = 0
+    * rows without an id or a value drop too; at L > 0 a null value is
+    * punctuation and a null id sorts as −1.
     */
-  private def countOoo(tss: Array[Long], hwm: Long): Long =
-    tss.count(_ < hwm).toLong
+  private def idRows(events: DataFrame, userCol: String, tsCol: String,
+                     idCol: String, valueCol: String, maxLateness: Long,
+                     payload: Column): DataFrame = {
+    val rows =
+      if (maxLateness > 0L) events
+      else events.filter(col(idCol).isNotNull && col(valueCol).isNotNull)
+    rows.filter(col(userCol).isNotNull && col(tsCol).isNotNull)
+      .select(col(userCol).cast("long").as("user"),
+        col(tsCol).cast("long").as("ts"),
+        coalesce(col(idCol).cast("long"), lit(-1L)).as("id"), payload)
+  }
 
   /** Streaming per-entity EWMA baseline — `ops/Velocity.ewmaFinal`
     * maintained IN the stream: state per entity is TWO numbers (count
@@ -184,174 +115,27 @@ object StreamVelocity {
                  evictHorizonUs: Long = 0L): Dataset[EwmaRow] = {
     require(aNum > 0 && aDen > 0 && aNum < aDen && (aDen & (aDen - 1)) == 0,
       s"alpha must be dyadic in (0,1): got $aNum/$aDen")
-    require(maxLateness >= 0L,
-      s"maxLateness must be >= 0, got $maxLateness")
-    require(evictHorizonUs >= 0L,
-      s"evictHorizonUs must be >= 0, got $evictHorizonUs")
-    require(evictHorizonUs == 0L || evictHorizonUs >= maxLateness,
-      s"evictHorizonUs ($evictHorizonUs) must cover maxLateness " +
-        s"($maxLateness): a drain must release every held event " +
-        "before any legal arrival could reorder with it (object doc)")
+    requireOrdered(maxLateness, evictHorizonUs)
     val alpha = aNum.toDouble / aDen
     val beta = 1.0 - alpha
-    val spark = events.sparkSession
-    import spark.implicits._
-    if (evictHorizonUs > 0L && maxLateness == 0L)
-      // eviction arm (object doc): same fold as L = 0, but the state
-      // times out once the watermark passes hwm + horizon
-      events.filter(col(userCol).isNotNull && col(tsCol).isNotNull &&
-          col(idCol).isNotNull && col(valueCol).isNotNull)
-        .select(col(userCol).cast("long").as("user"),
-          col(tsCol).cast("long").as("ts"),
-          col(idCol).cast("long").as("id"),
-          col(valueCol).cast("double").as("v"),
-          timestamp_micros(col(tsCol).cast("long")).as("__evt"))
-        .withWatermark("__evt", s"$evictHorizonUs microseconds")
-        .as[EwmaEvent] // __evt rides in the plan for the watermark
-        .groupByKey(_.user)
-        .flatMapGroupsWithState[EwmaState, EwmaRow](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-          (user: Long, rows: Iterator[EwmaEvent],
-           state: GroupState[EwmaState]) =>
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val sorted = rows.toArray.sortBy(r => (r.ts, r.id))
-              val s0 = state.getOption.getOrElse(
-                EwmaState(0L, 0.0, Long.MinValue, 0L))
-              var (n, e) = (s0.n, s0.ewma)
-              val ooo = s0.ooo + countOoo(sorted.map(_.ts), s0.hwm)
-              // invoked with data here, so sorted is nonempty and the
-              // re-armed timeout is always past the watermark
-              val hwm = math.max(s0.hwm, sorted.last.ts)
-              var i = 0
-              while (i < sorted.length) {
-                e = if (n == 0L) sorted(i).v
-                    else e * beta + alpha * sorted(i).v
-                n += 1
-                i += 1
-              }
-              state.update(EwmaState(n, e, hwm, ooo))
-              state.setTimeoutTimestamp(evictAtMs(hwm, evictHorizonUs))
-              Iterator(EwmaRow(user, n, e, ooo))
-            }
-        }
-    else if (maxLateness == 0L)
-      events.filter(col(userCol).isNotNull && col(tsCol).isNotNull &&
-          col(idCol).isNotNull && col(valueCol).isNotNull)
-        .select(col(userCol).cast("long").as("user"),
-          col(tsCol).cast("long").as("ts"),
-          col(idCol).cast("long").as("id"),
-          col(valueCol).cast("double").as("v"))
-        .as[EwmaEvent]
-        .groupByKey(_.user)
-        .flatMapGroupsWithState[EwmaState, EwmaRow](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-          (user: Long, rows: Iterator[EwmaEvent],
-           state: GroupState[EwmaState]) =>
-            val sorted = rows.toArray.sortBy(r => (r.ts, r.id))
-            val s0 = state.getOption.getOrElse(
-              EwmaState(0L, 0.0, Long.MinValue, 0L))
-            var (n, e) = (s0.n, s0.ewma)
-            val ooo = s0.ooo + countOoo(sorted.map(_.ts), s0.hwm)
-            val hwm =
-              if (sorted.isEmpty) s0.hwm
-              else math.max(s0.hwm, sorted.last.ts)
-            var i = 0
-            while (i < sorted.length) {
-              e = if (n == 0L) sorted(i).v else e * beta + alpha * sorted(i).v
-              n += 1
-              i += 1
-            }
-            state.update(EwmaState(n, e, hwm, ooo))
-            if (sorted.nonEmpty) Iterator(EwmaRow(user, n, e, ooo))
-            else Iterator.empty
-        }
-    else {
-      // bounded-lateness reorder path (object doc): null value =
-      // punctuation; releases fold in strict event-time order;
-      // optionally composed with eviction (drain-then-remove)
-      val evict = evictHorizonUs > 0L
-      val base = events
-        .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
-        .select(col(userCol).cast("long").as("user"),
-          col(tsCol).cast("long").as("ts"),
-          coalesce(col(idCol).cast("long"), lit(-1L)).as("id"),
-          col(valueCol).cast("double").as("v"))
-      val src =
-        if (!evict) base
-        else base
-          .withColumn("__evt", timestamp_micros(col("ts")))
-          .withWatermark("__evt", s"$evictHorizonUs microseconds")
-      val timeout =
-        if (evict) GroupStateTimeout.EventTimeTimeout()
-        else GroupStateTimeout.NoTimeout
-      src.as[EwmaEventOpt]
-        .groupByKey(_.user)
-        .flatMapGroupsWithState[EwmaStateR, EwmaRow](
-          OutputMode.Append(), timeout) {
-          (user: Long, rows: Iterator[EwmaEventOpt],
-           state: GroupState[EwmaStateR]) =>
-          if (evict && state.hasTimedOut) {
-            // DRAIN (object doc): the forced end-of-life punctuation —
-            // every held event folds and emits once, then the key goes
-            val s0 = state.get
-            val rel = s0.buf.sortBy(r => (r.ts, r.id))
-            var (n, e) = (s0.n, s0.ewma)
-            rel.foreach { r =>
-              e = if (n == 0L) r.v else e * beta + alpha * r.v
-              n += 1
-            }
-            state.remove()
-            if (rel.nonEmpty) Iterator(EwmaRow(user, n, e, s0.ooo))
-            else Iterator.empty
-          } else {
-            val s0 = state.getOption.getOrElse(
-              EwmaStateR(0L, 0.0, Vector.empty, Long.MinValue, 0L))
-            val incoming = rows.toArray
-            val hwm =
-              if (incoming.isEmpty) s0.hwm
-              else math.max(s0.hwm, incoming.map(_.ts).max)
-            val real = incoming.collect {
-              case r if r.v.isDefined => EwmaPend(r.ts, r.id, r.v.get)
-            }
-            val (tooLate, ok) = real.partition(r =>
-              s0.hwm != Long.MinValue && r.ts < s0.hwm - maxLateness)
-            val ooo = s0.ooo + tooLate.length
-            val merged = (s0.buf ++ ok).sortBy(r => (r.ts, r.id))
-            val (rel, hold) =
-              if (hwm == Long.MinValue) (Vector.empty[EwmaPend], merged)
-              else merged.partition(_.ts < hwm - maxLateness)
-            // too-late rows fold first: their ts is strictly below
-            // every buffered entry's (buffer invariant), so this IS
-            // event-time order among the batch's folds — and as-of-
-            // arrival relative to already-finalized ones (the L=0
-            // fallback, counted above)
-            val folded = tooLate.sortBy(r => (r.ts, r.id)) ++ rel
-            var (n, e) = (s0.n, s0.ewma)
-            folded.foreach { r =>
-              e = if (n == 0L) r.v else e * beta + alpha * r.v
-              n += 1
-            }
-            state.update(EwmaStateR(n, e, hold, hwm, ooo))
-            if (evict && hwm != Long.MinValue)
-              state.setTimeoutTimestamp(evictAtMs(hwm, evictHorizonUs))
-            if (folded.nonEmpty) Iterator(EwmaRow(user, n, e, ooo))
-            else Iterator.empty
-          }
-        }
+    KeyedState.ordered[EwmaEventOpt, (Long, Double), EwmaRow](
+      idRows(events, userCol, tsCol, idCol, valueCol, maxLateness,
+        col(valueCol).cast("double").as("v")),
+      _.user, _.ts, _.v.isDefined, Ordering.by(r => (r.ts, r.id)),
+      (0L, 0.0), maxLateness, evictHorizonUs) { (user, acc, run, ooo) =>
+      var (n, e) = acc
+      run.foreach { r =>
+        e = if (n == 0L) r.v.get else e * beta + alpha * r.v.get
+        n += 1
+      }
+      ((n, e), if (run.isEmpty) Nil else Seq(EwmaRow(user, n, e, ooo)))
     }
   }
 
-  case class CusumEvent(user: Long, ts: Long, id: Long, cents: Long)
   case class CusumEventOpt(user: Long, ts: Long, id: Long,
                            cents: Option[Long])
   case class CusumRow(user: Long, n: Long, alarms: Long,
                       sp: Long, sn: Long, ooo: Long)
-  case class CusumState(n: Long, sp: Long, sn: Long, al: Long,
-                        hwm: Long, ooo: Long)
-  case class CusumPend(ts: Long, id: Long, cents: Long)
-  case class CusumStateR(n: Long, sp: Long, sn: Long, al: Long,
-                         buf: Seq[CusumPend], hwm: Long, ooo: Long)
 
   /** Streaming two-sided CUSUM — `ops/Velocity.cusumFinal` maintained
     * IN the stream: regime-shift alarms AT SERVING TIME with four
@@ -367,169 +151,25 @@ object StreamVelocity {
                   maxLateness: Long = 0L,
                   evictHorizonUs: Long = 0L): Dataset[CusumRow] = {
     require(hCents > 0, "alarm threshold must be positive")
-    require(maxLateness >= 0L,
-      s"maxLateness must be >= 0, got $maxLateness")
-    require(evictHorizonUs >= 0L,
-      s"evictHorizonUs must be >= 0, got $evictHorizonUs")
-    require(evictHorizonUs == 0L || evictHorizonUs >= maxLateness,
-      s"evictHorizonUs ($evictHorizonUs) must cover maxLateness " +
-        s"($maxLateness): a drain must release every held event " +
-        "before any legal arrival could reorder with it (object doc)")
-    val spark = events.sparkSession
-    import spark.implicits._
-    if (evictHorizonUs > 0L && maxLateness == 0L)
-      // eviction arm (object doc): the L = 0 integer fold under
-      // EventTimeTimeout — evicted keys re-seed at (0, 0, 0, 0)
-      events.filter(col(userCol).isNotNull && col(tsCol).isNotNull &&
-          col(idCol).isNotNull && col(valueCol).isNotNull)
-        .select(col(userCol).cast("long").as("user"),
-          col(tsCol).cast("long").as("ts"),
-          col(idCol).cast("long").as("id"),
-          round(col(valueCol) * 100).cast("long").as("cents"),
-          timestamp_micros(col(tsCol).cast("long")).as("__evt"))
-        .withWatermark("__evt", s"$evictHorizonUs microseconds")
-        .as[CusumEvent]
-        .groupByKey(_.user)
-        .flatMapGroupsWithState[CusumState, CusumRow](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-          (user: Long, rows: Iterator[CusumEvent],
-           state: GroupState[CusumState]) =>
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val sorted = rows.toArray.sortBy(r => (r.ts, r.id))
-              var st = state.getOption.getOrElse(
-                CusumState(0L, 0L, 0L, 0L, Long.MinValue, 0L))
-              val ooo = st.ooo + countOoo(sorted.map(_.ts), st.hwm)
-              val hwm = math.max(st.hwm, sorted.last.ts)
-              var i = 0
-              while (i < sorted.length) {
-                val d = sorted(i).cents - targetCents
-                val sp1 = math.max(0L, st.sp + d)
-                val sn1 = math.max(0L, st.sn - d)
-                st =
-                  if (sp1 > hCents || sn1 > hCents)
-                    CusumState(st.n + 1, 0L, 0L, st.al + 1, hwm, ooo)
-                  else CusumState(st.n + 1, sp1, sn1, st.al, hwm, ooo)
-                i += 1
-              }
-              state.update(st.copy(hwm = hwm, ooo = ooo))
-              state.setTimeoutTimestamp(evictAtMs(hwm, evictHorizonUs))
-              Iterator(CusumRow(user, st.n, st.al, st.sp, st.sn, ooo))
-            }
-        }
-    else if (maxLateness == 0L)
-      events.filter(col(userCol).isNotNull && col(tsCol).isNotNull &&
-          col(idCol).isNotNull && col(valueCol).isNotNull)
-        .select(col(userCol).cast("long").as("user"),
-          col(tsCol).cast("long").as("ts"),
-          col(idCol).cast("long").as("id"),
-          round(col(valueCol) * 100).cast("long").as("cents"))
-        .as[CusumEvent]
-        .groupByKey(_.user)
-        .flatMapGroupsWithState[CusumState, CusumRow](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-          (user: Long, rows: Iterator[CusumEvent],
-           state: GroupState[CusumState]) =>
-            val sorted = rows.toArray.sortBy(r => (r.ts, r.id))
-            var st = state.getOption.getOrElse(
-              CusumState(0L, 0L, 0L, 0L, Long.MinValue, 0L))
-            val ooo = st.ooo + countOoo(sorted.map(_.ts), st.hwm)
-            val hwm =
-              if (sorted.isEmpty) st.hwm
-              else math.max(st.hwm, sorted.last.ts)
-            var i = 0
-            while (i < sorted.length) {
-              val d = sorted(i).cents - targetCents
-              val sp1 = math.max(0L, st.sp + d)
-              val sn1 = math.max(0L, st.sn - d)
-              st =
-                if (sp1 > hCents || sn1 > hCents)
-                  CusumState(st.n + 1, 0L, 0L, st.al + 1, hwm, ooo)
-                else CusumState(st.n + 1, sp1, sn1, st.al, hwm, ooo)
-              i += 1
-            }
-            state.update(st.copy(hwm = hwm, ooo = ooo))
-            if (sorted.nonEmpty)
-              Iterator(CusumRow(user, st.n, st.al, st.sp, st.sn, ooo))
-            else Iterator.empty
-        }
-    else {
-      // bounded-lateness reorder path (object doc): null value =
-      // punctuation; releases fold in strict event-time order;
-      // optionally composed with eviction (drain-then-remove)
-      val evict = evictHorizonUs > 0L
-      val base = events
-        .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
-        .select(col(userCol).cast("long").as("user"),
-          col(tsCol).cast("long").as("ts"),
-          coalesce(col(idCol).cast("long"), lit(-1L)).as("id"),
-          round(col(valueCol) * 100).cast("long").as("cents"))
-      val src =
-        if (!evict) base
-        else base
-          .withColumn("__evt", timestamp_micros(col("ts")))
-          .withWatermark("__evt", s"$evictHorizonUs microseconds")
-      val timeout =
-        if (evict) GroupStateTimeout.EventTimeTimeout()
-        else GroupStateTimeout.NoTimeout
-      def fold(n0: Long, sp0: Long, sn0: Long, al0: Long,
-               rel: Seq[CusumPend]): (Long, Long, Long, Long) = {
-        var (n, sp, sn, al) = (n0, sp0, sn0, al0)
-        rel.foreach { r =>
-          val d = r.cents - targetCents
-          val sp1 = math.max(0L, sp + d)
-          val sn1 = math.max(0L, sn - d)
-          if (sp1 > hCents || sn1 > hCents) {
-            sp = 0L; sn = 0L; al += 1
-          } else { sp = sp1; sn = sn1 }
-          n += 1
-        }
-        (n, sp, sn, al)
+    requireOrdered(maxLateness, evictHorizonUs)
+    KeyedState.ordered[CusumEventOpt, (Long, Long, Long, Long), CusumRow](
+      idRows(events, userCol, tsCol, idCol, valueCol, maxLateness,
+        round(col(valueCol) * 100).cast("long").as("cents")),
+      _.user, _.ts, _.cents.isDefined, Ordering.by(r => (r.ts, r.id)),
+      (0L, 0L, 0L, 0L), maxLateness, evictHorizonUs) {
+      (user, acc, run, ooo) =>
+      var (n, sp, sn, al) = acc
+      run.foreach { r =>
+        val d = r.cents.get - targetCents
+        val sp1 = math.max(0L, sp + d)
+        val sn1 = math.max(0L, sn - d)
+        if (sp1 > hCents || sn1 > hCents) {
+          sp = 0L; sn = 0L; al += 1
+        } else { sp = sp1; sn = sn1 }
+        n += 1
       }
-      src.as[CusumEventOpt]
-        .groupByKey(_.user)
-        .flatMapGroupsWithState[CusumStateR, CusumRow](
-          OutputMode.Append(), timeout) {
-          (user: Long, rows: Iterator[CusumEventOpt],
-           state: GroupState[CusumStateR]) =>
-          if (evict && state.hasTimedOut) {
-            // DRAIN (object doc): fold every held event once, then go
-            val s0 = state.get
-            val rel = s0.buf.sortBy(r => (r.ts, r.id))
-            val (n, sp, sn, al) = fold(s0.n, s0.sp, s0.sn, s0.al, rel)
-            state.remove()
-            if (rel.nonEmpty)
-              Iterator(CusumRow(user, n, al, sp, sn, s0.ooo))
-            else Iterator.empty
-          } else {
-            val s0 = state.getOption.getOrElse(
-              CusumStateR(0L, 0L, 0L, 0L, Vector.empty,
-                Long.MinValue, 0L))
-            val incoming = rows.toArray
-            val hwm =
-              if (incoming.isEmpty) s0.hwm
-              else math.max(s0.hwm, incoming.map(_.ts).max)
-            val real = incoming.collect {
-              case r if r.cents.isDefined =>
-                CusumPend(r.ts, r.id, r.cents.get)
-            }
-            val (tooLate, ok) = real.partition(r =>
-              s0.hwm != Long.MinValue && r.ts < s0.hwm - maxLateness)
-            val ooo = s0.ooo + tooLate.length
-            val merged = (s0.buf ++ ok).sortBy(r => (r.ts, r.id))
-            val (rel, hold) =
-              if (hwm == Long.MinValue) (Vector.empty[CusumPend], merged)
-              else merged.partition(_.ts < hwm - maxLateness)
-            val folded = tooLate.sortBy(r => (r.ts, r.id)) ++ rel
-            val (n, sp, sn, al) = fold(s0.n, s0.sp, s0.sn, s0.al, folded)
-            state.update(CusumStateR(n, sp, sn, al, hold, hwm, ooo))
-            if (evict && hwm != Long.MinValue)
-              state.setTimeoutTimestamp(evictAtMs(hwm, evictHorizonUs))
-            if (folded.nonEmpty)
-              Iterator(CusumRow(user, n, al, sp, sn, ooo))
-            else Iterator.empty
-          }
-        }
+      ((n, sp, sn, al),
+        if (run.isEmpty) Nil else Seq(CusumRow(user, n, al, sp, sn, ooo)))
     }
   }
 
@@ -543,69 +183,46 @@ object StreamVelocity {
                      maxLateness: Long = 0L,
                      evictHorizonUs: Long = 0L): Dataset[VelRow] = {
     require(windowMicros > 0, "windowMicros must be positive")
-    require(maxLateness >= 0L,
-      s"maxLateness must be >= 0, got $maxLateness")
-    require(evictHorizonUs >= 0L,
-      s"evictHorizonUs must be >= 0, got $evictHorizonUs")
-    require(evictHorizonUs == 0L ||
-      evictHorizonUs >= math.max(maxLateness, windowMicros),
-      s"evictHorizonUs ($evictHorizonUs) must cover both maxLateness " +
-        s"($maxLateness) and the trailing window ($windowMicros): an " +
-        "evicted key must have nothing a legal arrival could still " +
-        "reorder with or count (object doc)")
-    val spark = events.sparkSession
-    import spark.implicits._
-    if (maxLateness > 0L) return trailingCountsReorder(
-      events, userCol, tsCol, tagCol, windowMicros, maxLateness,
-      evictHorizonUs)
-    if (evictHorizonUs > 0L) return trailingCountsEvict(
-      events, userCol, tsCol, tagCol, windowMicros, evictHorizonUs)
+    requireOrdered(maxLateness, evictHorizonUs)
+    require(evictHorizonUs == 0L || evictHorizonUs >= windowMicros,
+      s"evictHorizonUs ($evictHorizonUs) must cover the trailing " +
+        s"window ($windowMicros): an evicted key must have nothing a " +
+        "legal arrival could still count (object doc)")
     // dead-letter stance, enforced: a null user/ts would throw inside
     // the primitive-field encoder ("Null value appeared in non-nullable
     // field") and KILL the streaming query — rows without an entity or
-    // a clock have no defined trailing count, so they drop here; a null
-    // tag is representable and coalesces to "" for the sort tie-break
-    events.filter(col(userCol).isNotNull && col(tsCol).isNotNull)
+    // a clock have no defined trailing count, so they drop here. A
+    // null tag is punctuation at L > 0 and coalesces to "" for the
+    // sort tie-break at L = 0
+    val tag = col(tagCol).cast("string")
+    val rows = events.filter(col(userCol).isNotNull && col(tsCol).isNotNull)
       .select(col(userCol).cast("long").as("user"),
         col(tsCol).cast("long").as("ts"),
-        coalesce(col(tagCol).cast("string"), lit("")).as("tag"))
-      .as[TaggedEvent]
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[VelState, VelRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[TaggedEvent],
-         state: GroupState[VelState]) =>
-          val s0 = state.getOption.getOrElse(
-            VelState(Vector.empty[Long], Long.MinValue, 0L))
-          var times = s0.times.toVector
-          // batch rows carry no arrival order — event-time order is the
-          // deterministic processing order (tag tie-break for stability)
-          val sorted = rows.toArray.sortBy(r => (r.ts, r.tag))
-          val ooo = s0.ooo + countOoo(sorted.map(_.ts), s0.hwm)
-          val hwm =
-            if (sorted.isEmpty) s0.hwm
-            else math.max(s0.hwm, sorted.last.ts)
-          val out = Vector.newBuilder[VelRow]
-          var i = 0
-          while (i < sorted.length) {
-            val t = sorted(i).ts
-            var j = i
-            while (j < sorted.length && sorted(j).ts == t) j += 1
-            // evict beyond the window, admit ALL same-instant peers,
-            // then emit each with the full peer-inclusive count
-            times = times.filter(_ > t - windowMicros) ++
-              Vector.fill(j - i)(t)
-            val n = times.length
-            var k = i
-            while (k < j) {
-              out += VelRow(user, sorted(k).ts, sorted(k).tag, n, ooo)
-              k += 1
-            }
-            i = j
-          }
-          state.update(VelState(times, hwm, ooo))
-          out.result().iterator
+        (if (maxLateness > 0L) tag else coalesce(tag, lit(""))).as("tag"))
+    KeyedState.ordered[TaggedEvent, Seq[Long], VelRow](
+      rows, _.user, _.ts, _.tag != null, Ordering.by(r => (r.ts, r.tag)),
+      Vector.empty[Long], maxLateness, evictHorizonUs) {
+      (user, times0, run, ooo) =>
+      var times = times0.toVector
+      val out = Vector.newBuilder[VelRow]
+      var i = 0
+      while (i < run.length) {
+        val t = run(i).ts
+        var j = i
+        while (j < run.length && run(j).ts == t) j += 1
+        // evict beyond the window, admit ALL same-instant peers,
+        // then emit each with the full peer-inclusive count
+        times = times.filter(_ > t - windowMicros) ++ Vector.fill(j - i)(t)
+        val n = times.length
+        var k = i
+        while (k < j) {
+          out += VelRow(user, run(k).ts, run(k).tag, n, ooo)
+          k += 1
+        }
+        i = j
       }
+      (times, out.result())
+    }
   }
 
   /** Streaming Holt linear-trend baseline — `ops/Seasonal.holtLinear`
@@ -630,38 +247,20 @@ object StreamVelocity {
     // stream has no pre-aggregation to guard on): same loud failure,
     // same contract, just at arrival time
     val bound = graft.ops.Seasonal.holtCentsBound(aNum, aDen)
-    val dayUs = 86400000000L
     val horizonUs = evictHorizonDays * dayUs
     val spark = daily.sparkSession
     import spark.implicits._
-    val rows0 = daily.filter(col(grpCol).isNotNull &&
-        col(dayCol).isNotNull && col(centsCol).isNotNull)
-      .select(col(grpCol).cast("string").as("grp"),
-        col(dayCol).cast("long").as("day"),
-        col(centsCol).cast("long").as("cents"))
-    // eviction arm (object doc): the day index lifts to an event-time
-    // column so the engine's watermark drives the timeout — a group
-    // silent past the horizon drops its (n, l, b) and re-seeds on
-    // reappearance
-    val rows =
-      if (evictHorizonDays == 0L) rows0
-      else rows0
-        .withColumn("__evt", timestamp_micros(col("day") * dayUs))
-        .withWatermark("__evt", s"$horizonUs microseconds")
-    val timeout =
-      if (evictHorizonDays == 0L) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.EventTimeTimeout()
-    rows.as[HoltEvent]
+    // the day index lifts to event time for the eviction clock: a
+    // group silent past the horizon drops its (n, l, b) and re-seeds
+    dailyRows(daily, grpCol, dayCol, centsCol, horizonUs)
       .groupByKey(_.grp)
       .flatMapGroupsWithState[HoltState, HoltRow](
-        OutputMode.Append(), timeout) {
+        OutputMode.Append(), KeyedState.timeout(horizonUs)) {
         (grp: String, rows: Iterator[HoltEvent],
          state: GroupState[HoltState]) =>
-          if (evictHorizonDays > 0L && state.hasTimedOut) {
-            state.remove(); Iterator.empty
-          } else {
+          KeyedState.step(state, horizonUs) { prev =>
             val sorted = rows.toArray.sortBy(_.day)
-            val s0 = state.getOption.getOrElse(HoltState(0L, 0L, 0L))
+            val s0 = prev.getOrElse(HoltState(0L, 0L, 0L))
             var (n, l, b) = (s0.n, s0.l, s0.b)
             sorted.foreach { r =>
               require(math.abs(r.cents) <= bound,
@@ -676,17 +275,30 @@ object StreamVelocity {
               }
               n += 1L
             }
-            state.update(HoltState(n, l, b))
-            if (evictHorizonDays > 0L && sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                evictAtMs(sorted.last.day * dayUs, horizonUs))
-            if (sorted.nonEmpty) Iterator(HoltRow(grp, n, l, b))
-            else Iterator.empty
+            (HoltState(n, l, b), sorted.last.day * dayUs,
+              Iterator(HoltRow(grp, n, l, b)))
           }
       }
   }
 
-  case class KllEvent(grp: String, v: Double)
+  private val dayUs = 86400000000L
+
+  /** The `(grp, day, cents)` rows of [[holtStates]] and [[hwStates]],
+    * non-null, with the day index as the eviction clock.
+    */
+  private def dailyRows(daily: DataFrame, grpCol: String, dayCol: String,
+                        centsCol: String,
+                        horizonUs: Long): Dataset[HoltEvent] = {
+    val spark = daily.sparkSession
+    import spark.implicits._
+    val rows = daily.filter(col(grpCol).isNotNull &&
+        col(dayCol).isNotNull && col(centsCol).isNotNull)
+      .select(col(grpCol).cast("string").as("grp"),
+        col(dayCol).cast("long").as("day"),
+        col(centsCol).cast("long").as("cents"))
+    KeyedState.watermark(rows, col("day") * dayUs, horizonUs).as[HoltEvent]
+  }
+
   case class KllEventT(grp: String, v: Double, ts: Long)
   case class KllEvState(hwm: Long, bytes: Array[Byte])
   case class PEst(p: Int, est: Double)
@@ -711,13 +323,13 @@ object StreamVelocity {
     *
     * Eviction (r12 verdict mandate #1 — the family contract has no
     * exceptions among per-entity states): with `evictHorizonUs > 0`
-    * (and `tsUsCol` naming the event-time column) the state runs
-    * under `EventTimeTimeout` — an entity silent past hwm + horizon
+    * (and `tsUsCol` naming the event-time column) the state expires
+    * by the [[KeyedState]] horizon — an entity silent past hwm + horizon
     * drops its ENTIRE compactor hierarchy and re-seeds as a FRESH
     * sketch on reappearance (n restarts; the monitor answers "this
     * entity's recent distribution", so an evicted history must not
-    * leak back in). Horizon off keeps the NoTimeout path below
-    * byte-identical, so st30's oracle rows are untouched.
+    * leak back in). With the horizon off the state never expires and
+    * `tsUsCol` is not read.
     */
   def kllQuantileStates(events: DataFrame, keyCol: String,
                         valueCol: String, capacity: Int,
@@ -735,65 +347,35 @@ object StreamVelocity {
         "the event-time column")
     val spark = events.sparkSession
     import spark.implicits._
-    if (evictHorizonUs > 0L)
-      events.filter(col(keyCol).isNotNull && col(valueCol).isNotNull &&
-          col(tsUsCol).isNotNull)
-        .select(col(keyCol).cast("string").as("grp"),
-          col(valueCol).cast("double").as("v"),
-          col(tsUsCol).cast("long").as("ts"),
-          timestamp_micros(col(tsUsCol).cast("long")).as("__evt"))
-        .withWatermark("__evt", s"$evictHorizonUs microseconds")
-        .as[KllEventT] // __evt rides in the plan for the watermark
-        .groupByKey(_.grp)
-        .flatMapGroupsWithState[KllEvState, KllRow](
-          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-          (grp: String, rows: Iterator[KllEventT],
-           state: GroupState[KllEvState]) =>
-            if (state.hasTimedOut) { state.remove(); Iterator.empty }
-            else {
-              val s0 = state.getOption
-              val st = s0.map(s => graft.functions.KllSketchAgg.State
-                  .fromBytes(s.bytes))
-                .getOrElse(graft.functions.KllSketchAgg.State.empty())
-              var hwm = s0.map(_.hwm).getOrElse(Long.MinValue)
-              var any = false
-              rows.foreach { r =>
-                st.add(r.v, capacity); any = true
-                if (r.ts > hwm) hwm = r.ts
-              }
-              state.update(KllEvState(hwm, st.toBytes))
-              // invoked with data here, so the re-armed timeout is
-              // always past the watermark
-              state.setTimeoutTimestamp(evictAtMs(hwm, evictHorizonUs))
-              if (any)
-                Iterator(KllRow(grp, st.count,
-                  percents.zip(st.quantiles(percents))
-                    .map { case (p, e) => PEst(p, e) }))
-              else Iterator.empty
-            }
-        }
-    else
-      events.filter(col(keyCol).isNotNull && col(valueCol).isNotNull)
-        .select(col(keyCol).cast("string").as("grp"),
-          col(valueCol).cast("double").as("v"))
-        .as[KllEvent]
-        .groupByKey(_.grp)
-        .flatMapGroupsWithState[Array[Byte], KllRow](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-          (grp: String, rows: Iterator[KllEvent],
-           state: GroupState[Array[Byte]]) =>
-            val st = state.getOption
-              .map(graft.functions.KllSketchAgg.State.fromBytes)
+    // arrival order within the batch is kept: the sketch's compaction
+    // is order-dependent, so nothing sorts here
+    val ts =
+      if (evictHorizonUs > 0L) col(tsUsCol).cast("long") else lit(Long.MinValue)
+    val rows = events.select(col(keyCol).cast("string").as("grp"),
+        col(valueCol).cast("double").as("v"), ts.as("ts"))
+      .filter(col("grp").isNotNull && col("v").isNotNull &&
+        col("ts").isNotNull)
+    KeyedState.watermark(rows, col("ts"), evictHorizonUs).as[KllEventT]
+      .groupByKey(_.grp)
+      .flatMapGroupsWithState[KllEvState, KllRow](
+        OutputMode.Append(), KeyedState.timeout(evictHorizonUs)) {
+        (grp: String, rows: Iterator[KllEventT],
+         state: GroupState[KllEvState]) =>
+          KeyedState.step(state, evictHorizonUs) { prev =>
+            val st = prev.map(s => graft.functions.KllSketchAgg.State
+                .fromBytes(s.bytes))
               .getOrElse(graft.functions.KllSketchAgg.State.empty())
-            var any = false
-            rows.foreach { r => st.add(r.v, capacity); any = true }
-            state.update(st.toBytes)
-            if (any)
+            var hwm = prev.fold(Long.MinValue)(_.hwm)
+            rows.foreach { r =>
+              st.add(r.v, capacity)
+              if (r.ts > hwm) hwm = r.ts
+            }
+            (KllEvState(hwm, st.toBytes), hwm,
               Iterator(KllRow(grp, st.count,
                 percents.zip(st.quantiles(percents))
-                  .map { case (p, e) => PEst(p, e) }))
-            else Iterator.empty
-        }
+                  .map { case (p, e) => PEst(p, e) })))
+          }
+      }
   }
 
   /** Streaming Holt–Winters — `ops/Seasonal.holtWinters` maintained
@@ -829,36 +411,20 @@ object StreamVelocity {
     // fold, so st29 stays bit-equal to w22
     val bound = graft.ops.Seasonal.hwCentsBound(maxCoef, driftHeadroom)
     val zBound = driftHeadroom * bound * 1000000L
-    val dayUs = 86400000000L
     val horizonUs = evictHorizonDays * dayUs
     val spark = daily.sparkSession
     import spark.implicits._
-    val rows0 = daily.filter(col(grpCol).isNotNull &&
-        col(dayCol).isNotNull && col(centsCol).isNotNull)
-      .select(col(grpCol).cast("string").as("grp"),
-        col(dayCol).cast("long").as("day"),
-        col(centsCol).cast("long").as("cents"))
-    // eviction arm (object doc; the holtStates recipe): a group
-    // silent past the horizon drops its (n, l, b, ring) and re-seeds
-    val rows =
-      if (evictHorizonDays == 0L) rows0
-      else rows0
-        .withColumn("__evt", timestamp_micros(col("day") * dayUs))
-        .withWatermark("__evt", s"$horizonUs microseconds")
-    val timeout =
-      if (evictHorizonDays == 0L) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.EventTimeTimeout()
-    rows.as[HoltEvent]
+    // eviction as in holtStates: a group silent past the horizon drops
+    // its (n, l, b, ring) and re-seeds
+    dailyRows(daily, grpCol, dayCol, centsCol, horizonUs)
       .groupByKey(_.grp)
       .flatMapGroupsWithState[HwState, HwRow](
-        OutputMode.Append(), timeout) {
+        OutputMode.Append(), KeyedState.timeout(horizonUs)) {
         (grp: String, rows: Iterator[HoltEvent],
          state: GroupState[HwState]) =>
-          if (evictHorizonDays > 0L && state.hasTimedOut) {
-            state.remove(); Iterator.empty
-          } else {
+          KeyedState.step(state, horizonUs) { prev =>
             val sorted = rows.toArray.sortBy(_.day)
-            val s0 = state.getOption.getOrElse(
+            val s0 = prev.getOrElse(
               HwState(0L, 0L, 0L, Vector.fill(period)(0L)))
             var (n, l, b) = (s0.n, s0.l, s0.b)
             var ring = s0.ring.toVector
@@ -892,174 +458,9 @@ object StreamVelocity {
               }
               n += 1L
             }
-            state.update(HwState(n, l, b, ring))
-            if (evictHorizonDays > 0L && sorted.nonEmpty)
-              state.setTimeoutTimestamp(
-                evictAtMs(sorted.last.day * dayUs, horizonUs))
-            if (sorted.nonEmpty)
-              Iterator(HwRow(grp, n, l, b, ring.head, ring.last))
-            else Iterator.empty
+            (HwState(n, l, b, ring), sorted.last.day * dayUs,
+              Iterator(HwRow(grp, n, l, b, ring.head, ring.last)))
           }
-      }
-  }
-
-  /** Eviction arm of [[trailingCounts]] (object doc): the L = 0
-    * per-event fold under EventTimeTimeout — a user idle past the
-    * horizon drops its window vector entirely; on reappearance the
-    * trailing count restarts from an empty window (correct: every
-    * evicted timestamp is at least horizon ≥ window behind the
-    * watermark when the horizon is sized ≥ the window span, which
-    * [[trailingCounts]] requires here so eviction can never discard
-    * a timestamp a future legal arrival still counts).
-    */
-  private def trailingCountsEvict(
-      events: DataFrame, userCol: String, tsCol: String,
-      tagCol: String, windowMicros: Long,
-      evictHorizonUs: Long): Dataset[VelRow] = {
-    require(evictHorizonUs >= windowMicros,
-      s"evictHorizonUs ($evictHorizonUs) must cover the trailing " +
-        s"window ($windowMicros): an evicted key must have nothing a " +
-        "legal arrival could still count")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.filter(col(userCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(userCol).cast("long").as("user"),
-        col(tsCol).cast("long").as("ts"),
-        coalesce(col(tagCol).cast("string"), lit("")).as("tag"),
-        timestamp_micros(col(tsCol).cast("long")).as("__evt"))
-      .withWatermark("__evt", s"$evictHorizonUs microseconds")
-      .as[TaggedEvent]
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[VelState, VelRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, rows: Iterator[TaggedEvent],
-         state: GroupState[VelState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s0 = state.getOption.getOrElse(
-              VelState(Vector.empty[Long], Long.MinValue, 0L))
-            var times = s0.times.toVector
-            val sorted = rows.toArray.sortBy(r => (r.ts, r.tag))
-            val ooo = s0.ooo + countOoo(sorted.map(_.ts), s0.hwm)
-            val hwm = math.max(s0.hwm, sorted.last.ts)
-            val out = Vector.newBuilder[VelRow]
-            var i = 0
-            while (i < sorted.length) {
-              val t = sorted(i).ts
-              var j = i
-              while (j < sorted.length && sorted(j).ts == t) j += 1
-              times = times.filter(_ > t - windowMicros) ++
-                Vector.fill(j - i)(t)
-              val n = times.length
-              var k = i
-              while (k < j) {
-                out += VelRow(user, sorted(k).ts, sorted(k).tag, n, ooo)
-                k += 1
-              }
-              i = j
-            }
-            state.update(VelState(times, hwm, ooo))
-            state.setTimeoutTimestamp(evictAtMs(hwm, evictHorizonUs))
-            out.result().iterator
-          }
-      }
-  }
-
-  /** Bounded-lateness arm of [[trailingCounts]] (object doc): events
-    * within `maxLateness` of the key's high-water mark are HELD and
-    * emitted exactly once on release, in strict event-time order with
-    * the full same-instant peer group; null-tag rows are punctuation.
-    * With `evictHorizonUs > 0` the key additionally DRAINS and
-    * removes once the watermark passes hwm + horizon.
-    */
-  private def trailingCountsReorder(
-      events: DataFrame, userCol: String, tsCol: String,
-      tagCol: String, windowMicros: Long,
-      maxLateness: Long, evictHorizonUs: Long = 0L): Dataset[VelRow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val evict = evictHorizonUs > 0L
-    /** Window-fold `folded` (event-time order, ties grouped) through
-      * `times0`, emitting one VelRow per event — shared by the data
-      * path and the drain.
-      */
-    def windowFold(user: Long, times0: Vector[Long],
-                   folded: Seq[TaggedEvent],
-                   ooo: Long): (Vector[Long], Vector[VelRow]) = {
-      var times = times0
-      val out = Vector.newBuilder[VelRow]
-      var i = 0
-      while (i < folded.length) {
-        val t = folded(i).ts
-        var j = i
-        while (j < folded.length && folded(j).ts == t) j += 1
-        times = times.filter(_ > t - windowMicros) ++
-          Vector.fill(j - i)(t)
-        val n = times.length
-        var k = i
-        while (k < j) {
-          out += VelRow(user, folded(k).ts, folded(k).tag, n, ooo)
-          k += 1
-        }
-        i = j
-      }
-      (times, out.result())
-    }
-    val base = events
-      .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(userCol).cast("long").as("user"),
-        col(tsCol).cast("long").as("ts"),
-        col(tagCol).cast("string").as("tag")) // null = punctuation
-    val src =
-      if (!evict) base
-      else base
-        .withColumn("__evt", timestamp_micros(col("ts")))
-        .withWatermark("__evt", s"$evictHorizonUs microseconds")
-    val timeout =
-      if (evict) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout
-    src.as[TaggedEvent]
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[VelStateR, VelRow](
-        OutputMode.Append(), timeout) {
-        (user: Long, rows: Iterator[TaggedEvent],
-         state: GroupState[VelStateR]) =>
-        if (evict && state.hasTimedOut) {
-          // DRAIN (object doc): held events emit exactly once with
-          // their window counts, then the key goes
-          val s0 = state.get
-          val rel = s0.buf.sortBy(r => (r.ts, r.tag))
-          val (_, out) = windowFold(user, s0.times.toVector, rel, s0.ooo)
-          state.remove()
-          out.iterator
-        } else {
-          val s0 = state.getOption.getOrElse(
-            VelStateR(Vector.empty, Vector.empty, Long.MinValue, 0L))
-          val incoming = rows.toArray
-          val hwm =
-            if (incoming.isEmpty) s0.hwm
-            else math.max(s0.hwm, incoming.map(_.ts).max)
-          val real = incoming.filter(_.tag != null)
-          val (tooLate, ok) = real.partition(r =>
-            s0.hwm != Long.MinValue && r.ts < s0.hwm - maxLateness)
-          val ooo = s0.ooo + tooLate.length
-          val merged = (s0.buf ++ ok).sortBy(r => (r.ts, r.tag))
-          val (rel, hold) =
-            if (hwm == Long.MinValue)
-              (Vector.empty[TaggedEvent], merged)
-            else merged.partition(_.ts < hwm - maxLateness)
-          // too-late rows fold first: strictly below every buffered
-          // ts (buffer invariant), so this is event-time order among
-          // the batch's folds; relative to already-released events
-          // they take the documented as-of-arrival fallback, counted
-          val folded = tooLate.sortBy(r => (r.ts, r.tag)) ++ rel
-          val (times, out) =
-            windowFold(user, s0.times.toVector, folded, ooo)
-          state.update(VelStateR(times, hold, hwm, ooo))
-          if (evict && hwm != Long.MinValue)
-            state.setTimeoutTimestamp(evictAtMs(hwm, evictHorizonUs))
-          out.iterator
-        }
       }
   }
 }

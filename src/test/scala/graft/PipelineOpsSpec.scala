@@ -426,7 +426,7 @@ class PipelineOpsSpec extends SparkSpec {
     // own md5() re-derives it)
     val signs = Similarity.projectionSigns(dim = 8, outDim = 4, seed = 42L)
     val fromSql = spark.range(4).selectExpr("id AS j")
-      .crossJoin(spark.range(8).selectExpr("id AS i"))
+      .crossJoin(broadcast(spark.range(8).selectExpr("id AS i")))
       .withColumn("s",
         when(substring(md5(concat(lit("rp42_"), $"i", lit("_"), $"j")), 1, 1)
           .isin("0", "2", "4", "6", "8", "a", "c", "e"), 1.0).otherwise(-1.0))

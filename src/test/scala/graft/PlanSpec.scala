@@ -268,6 +268,8 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{broadcast => bcast}
     val a = spark.range(10).toDF("x")
     val b = spark.range(10).toDF("y")
+    // the suite session runs with the interlock on: restore, never unset
+    val prior = spark.conf.getOption(CartesianGuard.ConfKey)
     spark.conf.set(CartesianGuard.ConfKey, "true")
     try {
       val ex = intercept[IllegalStateException] {
@@ -283,7 +285,10 @@ class PlanSpec extends SparkSpec {
       // interlock is opt-in: same bad plan passes with the conf off
       spark.conf.set(CartesianGuard.ConfKey, "false")
       CartesianGuard(a.crossJoin(b).queryExecution.optimizedPlan)
-    } finally spark.conf.unset(CartesianGuard.ConfKey)
+    } finally prior match {
+      case Some(v) => spark.conf.set(CartesianGuard.ConfKey, v)
+      case None => spark.conf.unset(CartesianGuard.ConfKey)
+    }
   }
 
   test("s13: the co-bucketed fact join itself is exchange-free") {

@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.tools.Probe
 
-/** Source scans that keep two decisions in one place each: how a
-  * session is configured (`Jobs.session`, the only builder) and where a
-  * capped query's asymptote story lives (a `CAP:` cover naming another
-  * query or a `graft.tools.Probe` case).
+/** Source scans that keep decisions in one place each: how a session
+  * is configured (`Jobs.session`, the only builder), how a keyed state
+  * tracks event time and expires (`graft.streaming.KeyedState`), and
+  * where a capped query's asymptote story lives (a `CAP:` cover naming
+  * another query or a `graft.tools.Probe` case).
   */
 class SourceScanSpec extends AnyFunSuite {
   private def files(root: String): Seq[File] = {
@@ -49,11 +50,28 @@ class SourceScanSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"CAP covers naming no other query or Probe case: $bad")
   }
 
-  test("Jobs.session is the only SparkSession builder under src/main") {
-    val builders = files("src/main/scala").filter(_.getName.endsWith(".scala"))
-      .flatMap(f => lines(f).filter(_.contains("SparkSession.builder"))
-        .map(_ => f.getPath))
+  test("Jobs.session is the only SparkSession builder under src") {
+    // ExtensionsSmoke runs in its own JVM to prove the injection path
+    // on a session it builds itself
+    val needle = "SparkSession" + ".builder" // split: this file is scanned too
+    val builders = (files("src/main/scala") ++ files("src/test/scala"))
+      .filter(_.getName.endsWith(".scala"))
+      .filterNot(_.getName == "ExtensionsSmoke.scala")
+      .flatMap(f => lines(f).filter(_.contains(needle)).map(_ => f.getPath))
     assert(builders == Seq("src/main/scala/graft/jobs/Jobs.scala"))
+  }
+
+  test("the keyed event-time protocol lives only in KeyedState") {
+    val protocol = Seq("hasTimedOut", "setTimeoutTimestamp",
+      "GroupStateTimeout.EventTimeTimeout")
+    val hits = files("src/main/scala").filter(_.getName.endsWith(".scala"))
+      .filterNot(_.getPath == "src/main/scala/graft/streaming/KeyedState.scala")
+      .flatMap { f =>
+        lines(f).zipWithIndex.flatMap { case (l, i) =>
+          protocol.filter(l.contains).map(p => s"${f.getPath}:${i + 1}: $p")
+        }
+      }
+    assert(hits.isEmpty, s"keyed-state protocol outside KeyedState: $hits")
   }
 
   test("the retired Bench session knobs appear nowhere in src or tools") {

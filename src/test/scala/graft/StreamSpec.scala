@@ -1114,4 +1114,31 @@ class StreamSpec extends SparkSpec {
     assert(!verdict(4L), s"id 4 must lose to id 3's fresh claim: $verdict")
     assert(verdict(1L) && verdict(2L), verdict.toString)
   }
+
+  test("LSH dedup drops a null-id row and, under eviction, a null-ts " +
+      "row instead of failing the query") {
+    import graft.streaming.StreamDedup
+    val textA = "alpha beta gamma delta epsilon zeta"
+    val textB = "one two three four five six"
+    Seq(2000000L, 0L).foreach { horizon =>
+      val stream = MemoryStream[(Option[Long], String, Option[Long])](spark)
+      val df = stream.toDF().toDF("id", "text", "ts")
+      val qn = s"dedup_null_sink_$horizon"
+      val q = StreamDedup.bandVerdicts(df, "text", "id", tsCol = "ts",
+          evictHorizonUs = horizon)
+        .toDF.writeStream.format("memory").queryName(qn)
+        .outputMode("append").start()
+      try {
+        stream.addData((None, textA, Some(1000000L)),
+          (Some(1L), textA, Some(1000000L)), (Some(2L), textB, None),
+          (Some(3L), textB, Some(1500000L)))
+        q.processAllAvailable()
+        assert(q.exception.isEmpty && q.isActive)
+      } finally q.stop()
+      val ids = spark.table(qn).select($"id").as[Long].collect().toSet
+      // with the horizon off the clock is not read, so id 2 claims too
+      val want = if (horizon > 0L) Set(1L, 3L) else Set(1L, 2L, 3L)
+      assert(ids == want, s"horizon $horizon: $ids")
+    }
+  }
 }
