@@ -23,6 +23,15 @@ import graft.streaming.{Scorer, WireFormat}
   * deploy classpath.
   */
 object Jobs {
+  /** Paths a scan lists on the driver before it lists them with a Spark
+    * job instead. A streaming file source hands each batch its new files
+    * as explicit paths; at Spark's default of 32, a restart over a
+    * 50-file backlog launched a 50-task listing job (about 1 s of
+    * getBatch, on the task slots the scoring needs) to stat 50 local
+    * files.
+    */
+  private val ListOnDriverPaths = 4096
+
   /** The one session builder for every main — the serving jobs, Verify,
     * Bench, Explain, the probes and ScaleUp — so the suite and the
     * oracle check the program configured exactly as it serves.
@@ -49,6 +58,8 @@ object Jobs {
       // dying on a cluster
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config(graft.plans.CartesianGuard.ConfKey, "true")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        ListOnDriverPaths.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -105,14 +116,21 @@ object ProduceMain {
 }
 
 /** Consumer (`FD/consumer.py`): wire stream → decode → score with the
-  * persisted model → parquet + formatted log + counter sinks. Processes
+  * persisted model → parquet + counter-snapshot sinks. Processes
   * everything currently available, then stops (streaming-with-finite-
   * input; pass `--follow S` to keep tailing for S seconds).
   */
 object ScoreMain {
   def main(args: Array[String]): Unit = {
-    val Array(src, modelDir, sinkDir) = args.take(3)
     val spark = Jobs.session("graft-score")
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** The consumer on a given session: `main` without the session's
+    * build and stop.
+    */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
+    val Array(src, modelDir, sinkDir) = args.take(3)
     val (features, model) = TrainingJob.load(spark, modelDir)
     val wire =
       if (src.startsWith("kafka:")) {
@@ -128,31 +146,35 @@ object ScoreMain {
     // would instead throw or pollute the counters
     val scored = Scorer.score(WireFormat.valid(wire), features, model)
     val q1 = Scorer.sinkWriter(scored, s"$sinkDir/scored",
-      s"$sinkDir/ckpt-scored", textLogPath = Some(s"$sinkDir/consumer_log"))
-      .start()
-    val q2 = Scorer.counterWriter(Scorer.counters(scored),
-      s"$sinkDir/counts_log", s"$sinkDir/ckpt-counts").start()
+      s"$sinkDir/ckpt-scored").start()
+    val q2 = Scorer.counterWriter(scored, s"$sinkDir/counts_log",
+      s"$sinkDir/ckpt-counts").start()
     val follow = args.indexOf("--follow") match {
       case i if i >= 0 && args.length > i + 1 => args(i + 1).toLong
       case _ => 0L
     }
-    q1.processAllAvailable(); q2.processAllAvailable()
-    if (follow > 0) { Thread.sleep(follow * 1000)
-      q1.processAllAvailable(); q2.processAllAvailable() }
-    q1.stop(); q2.stop()
-    spark.stop()
+    try {
+      q1.processAllAvailable(); q2.processAllAvailable()
+      if (follow > 0) { Thread.sleep(follow * 1000)
+        q1.processAllAvailable(); q2.processAllAvailable() }
+    } finally { q1.stop(); q2.stop() }
   }
 }
 
 /** Dashboard read path (`FD/dashboard.py` + `evaluation.py`): live
-  * metrics + fraud patterns + latest counters + tail of the formatted
-  * log, computed from the structured sink.
+  * metrics + fraud patterns + latest counters + the newest sink rows as
+  * consumer-log blocks, computed from the structured sink.
   */
 object MetricsMain {
   def main(args: Array[String]): Unit = {
-    val sinkDir = args(0)
     val spark = Jobs.session("graft-metrics")
-    val scored = spark.read.parquet(s"$sinkDir/scored")
+    try run(spark, args(0)) finally spark.stop()
+  }
+
+  /** `main` on a given session. */
+  def run(spark: SparkSession, sinkDir: String): Unit = {
+    val sink = spark.read.parquet(s"$sinkDir/scored")
+    val scored = sink
       .withColumn("label", col("Is_Fraud").cast("int"))
       .withColumn("pred", col("prediction").cast("int"))
 
@@ -176,13 +198,9 @@ object MetricsMain {
     Scorer.lastCounts(spark, s"$sinkDir/counts_log").show()
 
     println("== last 10 log blocks ==")
-    val blocks = spark.read.option("wholetext", "true")
-      .text(s"$sinkDir/consumer_log")
-      .select(explode(LogGrammar.splitBlocks(col("value"))).as("block"))
-    Cleaning.validBlocks(blocks)
+    Cleaning.validBlocks(Scorer.newestBlocks(sink, 10))
       .select(LogGrammar.parseBlock(col("block")).getItem("transaction_id")
         .as("txn"))
-      .limit(10).show()
-    spark.stop()
+      .show()
   }
 }

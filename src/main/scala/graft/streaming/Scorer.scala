@@ -1,11 +1,18 @@
 package graft.streaming
 
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets
+
+import scala.annotation.tailrec
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.Transformer
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ml.TrainingJob
 import graft.ops.LogGrammar
@@ -14,15 +21,19 @@ import graft.ops.LogGrammar
   * in Spark shape:
   *
   *   source → decode → feature exprs → PipelineModel.transform
-  *     → (a) formatted-block/structured sink (S6, via foreachBatch)
-  *     → (b) running counters (A1, update mode)
+  *     → (a) structured sink (S6, parquet keyed by batch id)
+  *     → (b) running-counter snapshots (A1, one file per batch id)
+  *
+  * Both sinks are `foreachBatch` writers keyed by batch id, so a batch
+  * replayed from the checkpoint rewrites its own output: with the
+  * replayable file source that makes each sink exactly-once in effect
+  * (Structured Streaming, SIGMOD 2018). Neither keeps a state store.
   *
   * The reference scores one row at a time (a 1×15 pandas frame per Kafka
   * message — maximally anti-vectorized). Micro-batching restores real
   * vectorization: the same `PipelineModel.transform` used in training
   * scores whole batches through codegen'd expressions, and the model
-  * broadcasts to executors via the plan closure. State lives in the
-  * state store, not process globals.
+  * broadcasts to executors via the plan closure.
   */
 object Scorer {
 
@@ -31,9 +42,10 @@ object Scorer {
             model: Transformer): DataFrame =
     TrainingJob.score(parsed, features, model)
 
-  /** A1: the two running counters as a streaming aggregation. Complete
-    * mode keeps the all-time totals queryable — the `counts.log`
-    * semantics (`FD/consumer.py:127-131`, SURVEY §drift-2).
+  /** A1: the two running counters as one aggregation. Over a stream in
+    * complete mode it keeps the all-time totals queryable — the
+    * `counts.log` semantics (`FD/consumer.py:127-131`, SURVEY §drift-2);
+    * the serving path snapshots them per batch instead ([[counterWriter]]).
     */
   def counters(scoredDf: DataFrame): DataFrame =
     graft.ops.Aggregates.classCounters(scoredDf, "prediction_label")
@@ -54,6 +66,13 @@ object Scorer {
       actual = col("Is_Fraud"),
       probability = col("fraud_probability")).as("block"))
 
+  /** The consumer-log tail, rendered when it is read: [[blocks]] over
+    * `n` rows of the newest batches of a parquet sink written by
+    * [[sinkWriter]] (its discovered `batch_id` column).
+    */
+  def newestBlocks(sink: DataFrame, n: Int): DataFrame =
+    blocks(sink.orderBy(col("batch_id").desc).limit(n))
+
   /** One micro-batch of the structured sink, keyed by batch id: each
     * batch OVERWRITES its own `batch_id=<n>` partition directory, so a
     * batch retried after a mid-write failure replaces its partial output
@@ -66,14 +85,18 @@ object Scorer {
                      dropCols: Seq[String]): Unit = {
     val cols = batch.columns.filterNot(dropCols.contains)
     val slim = batch.select(cols.map(col).toIndexedSeq: _*)
-    slim.persist()
-    slim.write.mode("overwrite").parquet(s"$parquetPath/batch_id=$batchId")
-    textLogPath.foreach { p =>
-      blocks(slim).coalesce(1).write.mode("overwrite")
-        .text(s"$p/batch_id=$batchId")
+    val parquet = s"$parquetPath/batch_id=$batchId"
+    textLogPath match {
+      case None => slim.write.mode("overwrite").parquet(parquet)
+      case Some(p) =>
+        // two writes read the batch: score it once
+        slim.persist()
+        try {
+          slim.write.mode("overwrite").parquet(parquet)
+          blocks(slim).coalesce(1).write.mode("overwrite")
+            .text(s"$p/batch_id=$batchId")
+        } finally slim.unpersist()
     }
-    slim.unpersist()
-    ()
   }
 
   /** Structured sink: scored stream → parquet (the queryable replacement
@@ -95,27 +118,85 @@ object Scorer {
       }
   }
 
-  /** Counter sink: update-mode counts appended as `counts.log`-format
-    * lines (S11) — `Fraud Count: N` / `Non-Fraud Count: N` snapshots,
-    * latest-wins on read (A7). At-least-once is sufficient here: a
-    * replayed batch re-appends an identical snapshot line, and the
-    * read side ([[lastCounts]]) takes the max of the monotonically
-    * nondecreasing counters, so duplicates are absorbed.
+  /** Counter sink: one `counts.log`-format snapshot per batch id (S11)
+    * — `Fraud Count: N` / `Non-Fraud Count: N`, all-time totals — at
+    * `part-<batchId, 20 digits>.txt`. A stateless append-mode
+    * `foreachBatch` over the scored stream; see [[writeCountsBatch]].
     */
-  def counterWriter(countersDf: DataFrame, textPath: String,
+  def counterWriter(scoredDf: DataFrame, textPath: String,
                     checkpoint: String): DataStreamWriter[Row] =
-    countersDf.writeStream
-      .outputMode(OutputMode.Complete)
+    scoredDf.writeStream
+      .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.select(
-          concat(
-            when(col("prediction_label") === "FRAUD", "Fraud Count: ")
-              .otherwise("Non-Fraud Count: "),
-            col("cnt")).as("line"))
-          .coalesce(1).write.mode("append").text(textPath)
-        ()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeCountsBatch(batch, batchId, textPath)
       }
+
+  private val FraudKey = "Fraud Count"
+  private val NonFraudKey = "Non-Fraud Count"
+  private val SnapshotName = """part-(\d+).*""".r
+
+  /** One counter batch: snapshot n = the newest snapshot below n plus
+    * this batch's label counts (at most two collected rows), written to
+    * a hidden temp file and renamed into place. Snapshots other than
+    * n − 1 and n are then deleted: n − 1 is what a replay of n adds
+    * to, and one above n can only be left by an abandoned checkpoint.
+    * A replayed batch finds the same n − 1 and rewrites byte-identical
+    * content, so the counters are exactly-once like the parquet sink,
+    * and the directory holds at most two snapshots.
+    */
+  def writeCountsBatch(batch: DataFrame, batchId: Long,
+                       textPath: String): Unit = {
+    val counts = graft.ops.Aggregates.classCounters(batch, "prediction_label")
+      .collect()
+    val fraud = counts.collect { case Row("FRAUD", n: Long) => n }.sum
+    val nonFraud = counts.map(_.getLong(1)).sum - fraud
+    val dir = new Path(textPath)
+    val fs = dir.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dir)
+    val prev = snapshots(fs, dir).filter(_._1 < batchId).maxByOption(_._1)
+      .map(s => parseCounts(readLines(fs, s._2))).getOrElse(Map.empty)
+    val text = s"$FraudKey: ${prev.getOrElse(FraudKey, 0L) + fraud}\n" +
+      s"$NonFraudKey: ${prev.getOrElse(NonFraudKey, 0L) + nonFraud}\n"
+    val name = f"part-$batchId%020d.txt"
+    val tmp = new Path(dir, s".$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val dst = new Path(dir, name)
+    // a local rename replaces the target atomically; a file system whose
+    // rename refuses an existing target gets it deleted first
+    if (!fs.rename(tmp, dst) && !(fs.delete(dst, false) && fs.rename(tmp, dst)))
+      throw new IOException(s"could not rename $tmp to $dst")
+    snapshots(fs, dir).filter { case (id, _) => id < batchId - 1 || id > batchId }
+      .foreach { case (_, p) => fs.delete(p, false) }
+  }
+
+  /** The `part-<n>…` snapshots directly under `dir`, with their ids. */
+  private def snapshots(fs: FileSystem, dir: Path): Seq[(Long, Path)] =
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case SnapshotName(n) if st.isFile => n.toLongOption.map(_ -> st.getPath)
+        case _ => None
+      }
+    }
+
+  private def readLines(fs: FileSystem, p: Path): Seq[String] = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    finally in.close()
+  }
+
+  /** The counters in `counts.log` lines: the key is the trimmed text
+    * before the first `:`, the value the trimmed rest; a line whose
+    * value is not a BIGINT (a torn or foreign line) is skipped, and a
+    * repeated key keeps its largest value.
+    */
+  private def parseCounts(lines: Seq[String]): Map[String, Long] =
+    lines.flatMap { l =>
+      val i = l.indexOf(':')
+      l.substring(i + 1).trim.toLongOption
+        .map((if (i < 0) l else l.substring(0, i)).trim -> _)
+    }.groupMapReduce(_._1)(_._2)(math.max)
 
   /** One micro-batch of the relational sink: delete any rows a previous
     * (failed, replayed) attempt of this batch id wrote, then append the
@@ -203,22 +284,29 @@ object Scorer {
       .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
       .drop("__event_time")
 
-  /** S11 read-back: latest counter value per key from a counts.log-format
-    * text dir. The counters are all-time (monotonically nondecreasing),
-    * so latest == max — no ordering column needed across append files.
+  /** S11 read-back: the newest counter snapshot under `textPath` (the
+    * greatest `part-<n>` id, listed on the driver) as a local
+    * `(key, last_value)` frame — `collect()` launches no job. A snapshot
+    * pruned between the listing and the open is listed again; an empty
+    * directory gives an empty frame.
     */
-  def lastCounts(spark: org.apache.spark.sql.SparkSession,
-                 textPath: String): DataFrame = {
-    val lines = spark.read.text(textPath)
-    lines
-      .select(
-        trim(substring_index(col("value"), ":", 1)).as("key"),
-        // try_cast: a torn/partial line (writer killed mid-append — the
-        // failure mode this sink tolerates by design) must skip, not
-        // raise ANSI CAST_INVALID_INPUT
-        expr("try_cast(trim(substring(value, instr(value, ':') + 1)) AS BIGINT)")
-          .as("cnt"))
-      .filter(col("cnt").isNotNull)
-      .groupBy(col("key")).agg(max(col("cnt")).as("last_value"))
+  def lastCounts(spark: SparkSession, textPath: String): DataFrame = {
+    val dir = new Path(textPath)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    @tailrec def newest(): Seq[String] =
+      snapshots(fs, dir).maxByOption(_._1) match {
+        case None => Nil
+        case Some((_, p)) =>
+          val lines = try Some(readLines(fs, p))
+            catch { case _: FileNotFoundException => None }
+          lines match {
+            case Some(ls) => ls
+            case None => newest()
+          }
+      }
+    val rows = parseCounts(newest()).toSeq.sortBy(_._1)
+      .map { case (k, v) => Row(k, v) }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("key", StringType), StructField("last_value", LongType))))
   }
 }

@@ -58,11 +58,12 @@ object StreamVelocity {
 
   case class HoltEvent(grp: String, day: Long, cents: Long)
   case class HoltRow(grp: String, n: Long, l: Long, b: Long)
-  case class HoltState(n: Long, l: Long, b: Long)
+  case class HoltState(n: Long, l: Long, b: Long, hwmDay: Long)
 
   case class HwRow(grp: String, n: Long, l: Long, b: Long,
                    sNext: Long, sLast: Long)
-  case class HwState(n: Long, l: Long, b: Long, ring: Seq[Long])
+  case class HwState(n: Long, l: Long, b: Long, ring: Seq[Long],
+                     hwmDay: Long)
 
   case class EwmaEventOpt(user: Long, ts: Long, id: Long,
                           v: Option[Double])
@@ -260,7 +261,7 @@ object StreamVelocity {
          state: GroupState[HoltState]) =>
           KeyedState.step(state, horizonUs) { prev =>
             val sorted = rows.toArray.sortBy(_.day)
-            val s0 = prev.getOrElse(HoltState(0L, 0L, 0L))
+            val s0 = prev.getOrElse(HoltState(0L, 0L, 0L, Long.MinValue))
             var (n, l, b) = (s0.n, s0.l, s0.b)
             sorted.foreach { r =>
               require(math.abs(r.cents) <= bound,
@@ -275,7 +276,8 @@ object StreamVelocity {
               }
               n += 1L
             }
-            (HoltState(n, l, b), sorted.last.day * dayUs,
+            val hwm = math.max(s0.hwmDay, sorted.last.day)
+            (HoltState(n, l, b, hwm), hwm * dayUs,
               Iterator(HoltRow(grp, n, l, b)))
           }
       }
@@ -425,7 +427,7 @@ object StreamVelocity {
           KeyedState.step(state, horizonUs) { prev =>
             val sorted = rows.toArray.sortBy(_.day)
             val s0 = prev.getOrElse(
-              HwState(0L, 0L, 0L, Vector.fill(period)(0L)))
+              HwState(0L, 0L, 0L, Vector.fill(period)(0L), Long.MinValue))
             var (n, l, b) = (s0.n, s0.l, s0.b)
             var ring = s0.ring.toVector
             sorted.foreach { r =>
@@ -458,7 +460,8 @@ object StreamVelocity {
               }
               n += 1L
             }
-            (HwState(n, l, b, ring), sorted.last.day * dayUs,
+            val hwm = math.max(s0.hwmDay, sorted.last.day)
+            (HwState(n, l, b, ring, hwm), hwm * dayUs,
               Iterator(HwRow(grp, n, l, b, ring.head, ring.last)))
           }
       }

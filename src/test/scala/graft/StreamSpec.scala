@@ -262,9 +262,8 @@ class StreamSpec extends SparkSpec {
     def startQuery() = {
       val src = spark.readStream
         .schema(graft.schema.Transactions.wireSchema).parquet(srcDir)
-      val counters = Scorer.counters(Scorer.score(src,
-        artifacts.features, artifacts.production))
-      Scorer.counterWriter(counters, txt, ckpt).start()
+      val scored = Scorer.score(src, artifacts.features, artifacts.production)
+      Scorer.counterWriter(scored, txt, ckpt).start()
     }
 
     val q1 = startQuery()
@@ -937,6 +936,39 @@ class StreamSpec extends SparkSpec {
     assert(hwGot.contains((2L, 13000000L, 2100000L)) &&
       hwGot.contains((1L, 7000000L, 0L)) && !hwGot.exists(_._1 == 3L),
       hwGot.toString)
+  }
+
+  test("eviction horizon: Holt and Holt-Winters states re-arm from the " +
+      "carried high-water mark, not from a batch of older days") {
+    import graft.streaming.StreamVelocity
+    // horizon 5 days. Batch 1 sets a's mark at day 10 (evict after the
+    // watermark passes day 15); batch 2 brings a an older, still legal
+    // day 8 while b moves the watermark to day 14; batch 3 (b only)
+    // moves it to day 15. Re-armed from day 8, a would evict at day 13
+    // and batch 4 would re-seed it to n = 1.
+    def run(name: String, start: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Set[Long] = {
+      val in = MemoryStream[(String, Long, Long)](spark)
+      val q = start(in.toDF().toDF("grp", "day", "cents"))
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        Seq(Seq(("a", 10L, 10L), ("b", 10L, 5L)),
+            Seq(("a", 8L, 20L), ("b", 19L, 5L)),
+            Seq(("b", 20L, 5L)),
+            Seq(("a", 16L, 7L))).foreach { rows =>
+          in.addData(rows: _*); q.processAllAvailable()
+        }
+      } finally q.stop()
+      spark.table(name).filter($"grp" === "a").select($"n").as[Long]
+        .collect().toSet
+    }
+    val holt = run("holt_rearm_sink", df => StreamVelocity.holtStates(
+      df, "grp", "day", "cents", evictHorizonDays = 5L).toDF)
+    assert(holt == Set(1L, 2L, 3L), holt.toString)
+    val hw = run("hw_rearm_sink", df => StreamVelocity.hwStates(
+      df, "grp", "day", "cents", period = 2, evictHorizonDays = 5L).toDF)
+    assert(hw == Set(1L, 2L, 3L), hw.toString)
   }
 
   test("eviction horizon: an idle KLL quantile state leaves the store " +
